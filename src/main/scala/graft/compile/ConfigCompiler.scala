@@ -25,11 +25,11 @@ final case class CompiledEvents(df: DataFrame) {
   def counters: DataFrame =
     df.agg(CompiledEvents.counterAggs.head, CompiledEvents.counterAggs.tail: _*)
   /** Attach the same counters as an `Observation` — zero extra passes;
-    * metrics materialize with the first action on the returned frame. */
-  def okObserved(obs: org.apache.spark.sql.Observation): DataFrame =
-    df.observe(obs, CompiledEvents.counterAggs.head,
-        CompiledEvents.counterAggs.tail: _*)
-      .filter(col("error").isNull).drop("error", "_counters")
+    * metrics materialize with the first action on a frame derived from
+    * the returned one. */
+  def observed(obs: org.apache.spark.sql.Observation): CompiledEvents =
+    CompiledEvents(df.observe(obs, CompiledEvents.counterAggs.head,
+      CompiledEvents.counterAggs.tail: _*))
   /** Final wire format: one JSON text line per event with nulls
     * stripped (`M/main.py:278-284`; `to_json` drops null fields). */
   def json: DataFrame =
@@ -40,6 +40,11 @@ final case class CompiledEvents(df: DataFrame) {
 }
 
 object CompiledEvents {
+  /** The `error` column's type: one transform dead-letter record. */
+  val ErrorType: StructType = StructType(
+    Seq("error_type", "config_id", "source_field", "original_row")
+      .map(StructField(_, StringType)))
+
   private[compile] val counterAggs: Seq[Column] = Seq(
     count(lit(1)).as("n_rows"),
     count(when(col("error").isNotNull, 1)).as("n_dlq"),
@@ -250,12 +255,7 @@ object ConfigCompiler {
     // mapping order (reference returns at the first failure) -------------
     val errorChain = (eventErr.toVector ++ requiredErrs)
     val errorCol =
-      if (errorChain.isEmpty) lit(null).cast(
-        StructType(Seq(
-          StructField("error_type", StringType),
-          StructField("config_id", StringType),
-          StructField("source_field", StringType),
-          StructField("original_row", StringType))))
+      if (errorChain.isEmpty) lit(null).cast(CompiledEvents.ErrorType)
       else coalesce(errorChain: _*)
 
     // --- A3 counter flags (`M/main.py:145,274-277`) ----------------------

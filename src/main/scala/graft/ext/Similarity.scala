@@ -54,14 +54,6 @@ object Similarity {
       lit(0).cast(Dec),
       (acc, v) => (acc + v).cast(Dec))
 
-  /** Exact decimal squared L2 norm (Column form). */
-  def norm2Exact(a: Column): Column = dotExact(a, a)
-
-  /** Cosine similarity (Column form, small use). */
-  def cosineExact(a: Column, b: Column): Column =
-    dotExact(a, b).cast("double") /
-      (sqrt(norm2Exact(a).cast("double")) * sqrt(norm2Exact(b).cast("double")))
-
   /** (id, v, norm) view of a vector frame: the unit of the
     * pairwise-dot execution shape. Empty/null vectors are dropped
     * (the explode-based shape dropped them structurally); elements
@@ -1247,18 +1239,6 @@ object Similarity {
     val cbs = pqTrainCodebooks(corpus, corpusId, corpusVec, m, ksub,
       iters, sampleMod)
     (cbs, pqEncode(corpus, corpusId, corpusVec, cbs))
-  }
-
-  def ivfPqTopK(corpus: DataFrame, corpusId: Column, corpusVec: Column,
-      queries: DataFrame, queryId: Column, queryVec: Column,
-      k: Int, numCells: Int = 16, nProbe: Int = 4, m: Int = 4,
-      ksub: Int = 8, iters: Int = 2, sampleMod: Long = 1L): DataFrame = {
-    val (cbs, codes) = buildPqIndex(corpus, corpusId, corpusVec, m,
-      ksub, iters, sampleMod)
-    pqAdcTopK(
-      ivfCandidates(corpus, corpusId, corpusVec, queries, queryId,
-        queryVec, numCells, nProbe),
-      codes, pqAdcTable(queries, queryId, queryVec, cbs), k)
   }
 
   /** Serve IVF-PQ from a PERSISTED index: `codebooks` (j, code, i,

@@ -264,9 +264,6 @@ object VecKernels {
   /** Column form of [[VecDotInt8]] (requires [[register]]ed session). */
   def vecDotI8(a: Column, b: Column): Column = call_function("vec_dot_i8", a, b)
 
-  /** Exact squared L2 norm. */
-  def vecNorm2Dec(a: Column): Column = vecDotDec(a, a)
-
   /** Column form of [[VecQuantInt8]] (requires [[register]]ed session). */
   def vecQuantI8(a: Column): Column = call_function("vec_quant_i8", a)
 

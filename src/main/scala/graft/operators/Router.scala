@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
@@ -91,14 +91,5 @@ object Router {
       .toDF("config_id")
     zeros.join(counted, Seq("config_id"), "left")
       .select(col("config_id"), coalesce(col("n"), lit(0L)).as("n"))
-  }
-
-  /** DataFrame of (ordinal, config_id, prefix, file_type) — used by
-    * tests and by callers that want the config list as data. */
-  def configFrame(spark: SparkSession, configs: Seq[SourceConfig]): DataFrame = {
-    import spark.implicits._
-    configs.zipWithIndex
-      .map { case (c, i) => (i, c.configId, c.sourcePrefix, c.fileType) }
-      .toDF("cfg_ordinal", "config_id", "source_gcs_prefix", "file_type")
   }
 }

@@ -4,13 +4,14 @@ import java.nio.charset.StandardCharsets.US_ASCII
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.compile.ConfigCompiler
+import graft.compile.{CompiledEvents, ConfigCompiler}
 import graft.config.SourceConfig
 import graft.operators.Router
-import graft.sink.{EventBatchSink, EventPoster}
+import graft.sink.{EventBatchSink, EventPoster, SinkDlqRecord}
 
 /** Batch backfill pipeline — `run_batch()` (`M/main_batch.py:431-503`)
   * re-expressed Spark-first:
@@ -44,24 +45,23 @@ object BatchPipeline {
     *    config (`read_error_<config_id>`);
     *  - `transform`: per-config [[Observation]] carrying `n_rows`,
     *    `n_dlq`, `missing_distinct_id`, `ts_parse_errors` — filled by
-    *    the first action on the transform output (zero extra passes).
+    *    the delivery pass (zero extra passes).
     */
   final case class BatchCounters(
       routed: Map[String, Long],
       unmatchedUris: Long,
       readErrors: Map[String, Long],
       transform: Map[String, Observation]) {
-    /** Transform-stage counters for one config; blocks until the first
-      * action on the transform output has run. */
+    /** Transform-stage counters for one config; blocks until the pass
+      * that observes them has run. */
     def transformMetrics(configId: String): Map[String, Long] =
-      transform.get(configId).map(_.get.map { case (k, v) =>
-        k -> v.asInstanceOf[Number].longValue
-      }).getOrElse(Map.empty)
+      transform.get(configId).map(longs).getOrElse(Map.empty)
   }
 
   /** The three output channels (§2.8, §2.2) plus the run's counters.
-    * `apiDlq` from [[run]] is eagerly materialized (delivery already
-    * happened); from [[post]] it is lazy — see [[post]]'s contract.
+    * `transformDlq` and `apiDlq` are read from the delivery pass's
+    * materialized output (delivery already happened; see [[deliver]]);
+    * `eventsJson` is the lazy event projection.
     * `imported` is the URI set the run actually transformed (routed,
     * PARQUET, passed the corrupt check) — the ONLY set a processed-file
     * ledger may record: unmatched and corrupt-skipped files must stay
@@ -223,9 +223,7 @@ object BatchPipeline {
           === cfg.configId)
       val compiled = ConfigCompiler.compile(cfg, routedRows, opts)
       val obs = Observation()
-      val ok = compiled.okObserved(obs)
-      (ok.select(to_json(struct(col("event"), col("properties")))
-        .as("event_json")), compiled.dlq, cfg.configId -> obs)
+      (compiled.observed(obs).json, compiled.dlq, cfg.configId -> obs)
     }
     (parts.map(_._1).reduceOption(_ union _).getOrElse(emptyJson(spark)),
       parts.map(_._2).reduceOption(_ union _).getOrElse(emptyDlq(spark)),
@@ -248,53 +246,130 @@ object BatchPipeline {
       routed: Map[SourceConfig, Seq[String]],
       opts: ConfigCompiler.Options = ConfigCompiler.Options())
       : (DataFrame, DataFrame, Map[String, Observation]) = {
-    val parts = routed.toSeq.sortBy(_._1.configId)
-      .filter(_._2.nonEmpty).map { case (cfg, paths) =>
+    val parts = compiledScans(spark, routed, opts).map { case (id, compiled) =>
+      val obs = Observation()
+      (compiled.observed(obs).json, compiled.dlq, id -> obs)
+    }
+    (parts.map(_._1).reduceOption(_ union _).getOrElse(emptyJson(spark)),
+      parts.map(_._2).reduceOption(_ union _).getOrElse(emptyDlq(spark)),
+      parts.map(_._3).toMap)
+  }
+
+  /** One vectorized scan per config with files, compiled; by config id. */
+  private def compiledScans(spark: SparkSession,
+      routed: Map[SourceConfig, Seq[String]], opts: ConfigCompiler.Options)
+      : Seq[(String, CompiledEvents)] =
+    routed.toSeq.sortBy(_._1.configId).filter(_._2.nonEmpty)
+      .map { case (cfg, paths) =>
         val input = spark.read
           // corrupt-file isolation at the scan too (S6): a file that
           // passed the footer check but has a rotten page must not fail
           // the whole config (`M/main_batch.py:100-103`)
           .option("ignoreCorruptFiles", "true")
           .parquet(paths: _*)
-        val compiled = ConfigCompiler.compile(cfg, input, opts)
-        val obs = Observation()
-        val ok = compiled.okObserved(obs)
-        (ok.select(to_json(struct(col("event"), col("properties")))
-          .as("event_json")), compiled.dlq, cfg.configId -> obs)
+        cfg.configId -> ConfigCompiler.compile(cfg, input, opts)
       }
-    (parts.map(_._1).reduceOption(_ union _).getOrElse(emptyJson(spark)),
-      parts.map(_._2).reduceOption(_ union _).getOrElse(emptyDlq(spark)),
-      parts.map(_._3).toMap)
+
+  /** What one delivery pass leaves behind: the two dead-letter channels
+    * read back from its materialized output, the A3 transform counters
+    * of each compiled input (in input order) and the output's row count
+    * per channel (`transform`, `api`). All are complete when [[deliver]]
+    * returns; reading them never re-posts. */
+  final case class Delivery(
+      transformDlq: DataFrame,
+      apiDlq: DataFrame,
+      counters: Seq[Observation],
+      channelRows: Map[String, Long])
+
+  /** The single delivery pass — `MapEvents` with its tagged transform-DLQ
+    * side output and A3 counters, posting in the same bundle
+    * (`M/main.py:145,151-162,274-277,306-423`). Takes compiled frames
+    * (`event`, `properties`, `error`, `_counters`), observes each one's
+    * counters, and runs ONE `mapPartitions` over their union: a good row
+    * goes through `to_json` into an [[EventBatchSink]], an error row
+    * passes straight through as a transform-DLQ record, and the sink's
+    * dead letters come out as API-DLQ records. The output holds only
+    * DLQ rows, tagged by which of its `error`/`api` structs is set, and
+    * is materialized once with an eager `localCheckpoint`: that one job
+    * is the delivery, and both DLQs and all counters are read from it,
+    * so nothing re-scans the input.
+    *
+    * CONTRACT: evaluation == delivery, AT-LEAST-ONCE. The posts happen
+    * inside this call and never again through the returned frames. A
+    * retried task re-posts its partition's batches (the endpoint
+    * dedups on `$insert_id`, as the reference relies on,
+    * `M/main.py:272-273`). `parallelism` > 0 repartitions the rows
+    * first — the analog of the reference's 5000-key fan-out
+    * (`M/main.py:296-303`); size it to the cluster, not to 5000. */
+  def deliver(spark: SparkSession, compiled: Seq[CompiledEvents],
+      posterFactory: () => EventPoster, parallelism: Int = 0): Delivery = {
+    val counters = compiled.map(_ => Observation())
+    val lines = compiled.zip(counters).map { case (c, obs) =>
+      c.observed(obs).df.select(when(col("error").isNull,
+        to_json(struct(col("event"), col("properties")))).as("event_json"),
+        col("error"))
+    }.reduceOption(_ union _).getOrElse(emptyLines(spark))
+    val rows = Observation()
+    val output = dlqRecords(lines, posterFactory, parallelism)
+      .observe(rows, count(col("error")).as("transform"),
+        count(col("api")).as("api"))
+      .localCheckpoint(true)
+    Delivery(output.filter(col("error").isNotNull).select("error.*"),
+      output.filter(col("api").isNotNull).select("api.*"),
+      counters, longs(rows))
   }
 
-  /** Posting stage: distributed batched/retrying sink; returns the API
-    * DLQ as a DataFrame. `parallelism` is the analog of the reference's
-    * 5000-key fan-out (`M/main.py:296-303`) — size it to the cluster,
-    * not to 5000.
+  /** The schema of an API dead-letter record (`M/main.py:377-400`). */
+  private val ApiDlqType = StructType(Seq("reason", "response", "payload")
+    .map(StructField(_, StringType)))
+
+  /** Lazy DLQ records of posting `lines` (`event_json`, `error`): the
+    * transform DLQ passed through in `error`, the sink's dead letters in
+    * `api`. Evaluation posts. */
+  private def dlqRecords(lines: DataFrame, posterFactory: () => EventPoster,
+      parallelism: Int): DataFrame = {
+    val fanned = if (parallelism > 0) lines.repartition(parallelism) else lines
+    val schema = StructType(Seq(
+      StructField("error", lines.schema("error").dataType),
+      StructField("api", ApiDlqType)))
+    fanned.mapPartitions { rows: Iterator[Row] =>
+      val sink = new EventBatchSink(posterFactory())
+      def api(d: SinkDlqRecord) = Row(null, Row(d.reason, d.response, d.payload))
+      rows.flatMap { r =>
+        if (r.isNullAt(1)) sink.add(r.getString(0)).iterator.map(api)
+        else Iterator.single(Row(r.getStruct(1), null))
+      } ++ sink.flush().iterator.map(api)
+    }(Encoders.row(schema))
+  }
+
+  /** An observation's metrics as longs; blocks until it is filled. */
+  private[pipeline] def longs(obs: Observation): Map[String, Long] =
+    obs.get.map { case (k, v) => k -> v.asInstanceOf[Number].longValue }
+
+  /** Posting stage alone: the API DLQ of posting an `event_json` frame,
+    * through the same per-partition sink as [[deliver]]. `parallelism`
+    * as there.
     *
     * CONTRACT: evaluation == delivery. The returned frame is lazy; the
     * first action on it performs the HTTP posting, and re-evaluating it
-    * would re-post every event. [[run]] therefore materializes it
-    * exactly once via `localCheckpoint` and hands out only the
-    * truncated frame; call sites using [[post]] directly must do the
-    * same (or consume it with a single action). */
+    * would re-post every event. Consume it with exactly one action, or
+    * materialize it once (`localCheckpoint(true)`) and hand out only
+    * the truncated frame. [[run]] and the streaming sink use
+    * [[deliver]], which does that for both DLQ channels in one job. */
   def post(eventsJson: DataFrame, posterFactory: () => EventPoster,
-      parallelism: Int = 0): DataFrame = {
-    val spark = eventsJson.sparkSession
-    import spark.implicits._
-    val fanned =
-      if (parallelism > 0) eventsJson.repartition(parallelism) else eventsJson
-    fanned.select(col("event_json")).as[String].mapPartitions { it =>
-      val sink = new EventBatchSink(posterFactory())
-      val dlq = it.flatMap(e => sink.add(e)) ++ sink.flush()
-      dlq.map(d => (d.reason, d.response, d.payload))
-    }.toDF("reason", "response", "payload")
-  }
+      parallelism: Int = 0): DataFrame =
+    dlqRecords(eventsJson.select(col("event_json"),
+        lit(null).cast(CompiledEvents.ErrorType).as("error")),
+      posterFactory, parallelism)
+      .select("api.*")
 
-  /** Full pipeline: route -> corrupt-isolate -> transform -> post.
-    * Posting executes eagerly in here, exactly once; `Result.apiDlq` is
-    * the lineage-truncated DLQ (safe to re-use, never re-posts). All
-    * counters are complete when this returns. */
+  /** Full pipeline: route -> corrupt-isolate -> one [[deliver]] pass
+    * (scan -> transform -> post, both DLQs, counters). Posting executes
+    * in here, exactly once per row barring task retries; `transformDlq`
+    * and `apiDlq` are read from the pass's materialized output (safe to
+    * re-use, never re-scan or re-post). `eventsJson` is the lazy event
+    * projection: an action on it re-scans but never posts. All counters
+    * are complete when this returns. */
   def run(spark: SparkSession, uris: Seq[String], configs: Seq[SourceConfig],
       posterFactory: () => EventPoster,
       opts: ConfigCompiler.Options = ConfigCompiler.Options(),
@@ -313,15 +388,20 @@ object BatchPipeline {
         (r, firstCounts, (uris.size - firstMatches.size).toLong)
       }
     val (readable, readErrors) = isolateCorrupt(spark, routed)
-    val (json, dlq, obs) = transformObserved(spark, readable, opts)
-    // Evaluation == delivery: run the posting job now, once, and
-    // truncate its lineage so downstream reuse cannot re-post.
-    val apiDlq = post(json, posterFactory, postParallelism)
-      .localCheckpoint(true)
-    Result(json, dlq, apiDlq,
-      BatchCounters(matchedCounts, unmatched, readErrors, obs),
+    val scans = compiledScans(spark, readable, opts)
+    val d = deliver(spark, scans.map(_._2), posterFactory, postParallelism)
+    Result(
+      scans.map(_._2.json).reduceOption(_ union _).getOrElse(emptyJson(spark)),
+      d.transformDlq, d.apiDlq,
+      BatchCounters(matchedCounts, unmatched, readErrors,
+        scans.map(_._1).zip(d.counters).toMap),
       readable.values.flatten.toSeq)
   }
+
+  private def emptyLines(spark: SparkSession): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
+      StructField("event_json", StringType),
+      StructField("error", CompiledEvents.ErrorType))))
 
   private def emptyJson(spark: SparkSession): DataFrame = {
     import spark.implicits._

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.Row
 
-import graft.compile.ConfigCompiler
+import graft.compile.{CompiledEvents, ConfigCompiler}
 import graft.config.SourceConfig
 import graft.sink.EventPoster
 
@@ -23,9 +23,10 @@ import graft.sink.EventPoster
   *  - The 10 s window + AddRandomKey + GroupByKey micro-batching
   *    (`M/main.py:506-508`) is the micro-batch trigger itself:
   *    `Trigger.ProcessingTime("10 seconds")` + `foreachBatch`.
-  *  - Posting + DLQs run inside `foreachBatch` via [[BatchPipeline.post]]
-  *    — no bundle/window re-windowing workaround needed (the
-  *    reference's `# FIX` sites, `M/main.py:341-344,415-423`).
+  *  - Posting + DLQs run inside `foreachBatch` as one
+  *    [[BatchPipeline.deliver]] pass per micro-batch — no bundle/window
+  *    re-windowing workaround needed (the reference's `# FIX` sites,
+  *    `M/main.py:341-344,415-423`).
   */
 object StreamingPipeline {
 
@@ -85,23 +86,31 @@ object StreamingPipeline {
     ConfigCompiler.compile(cfg, input, opts).df
   }
 
-  /** Wire a compiled stream to the batched/retrying sink + DLQ sinks
-    * via foreachBatch. DLQ frames are handed to the caller's writers so
+  /** Wire a compiled stream (`event`, `properties`, `error`,
+    * `_counters`, as [[transformStream]] returns it) to the
+    * batched/retrying sink + DLQ sinks via foreachBatch. DLQ frames are handed to the caller's writers so
     * tests can collect and production can append to storage (K2/K3 are
     * pluggable topics in the reference, `M/main.py:497-502,519-523`).
-    * Posting is materialized inside the callback; delivery is
-    * AT-LEAST-ONCE (a lost persist() block or a replayed micro-batch
-    * re-posts — downstream dedup is `$insert_id`, same posture as the
-    * reference, `M/main.py:272-273`). `writeApiDlq` receives an
-    * already-delivered, cached DLQ frame and must consume it
-    * synchronously (it is unpersisted when the writer returns).
+    *
+    * Each micro-batch is ONE [[BatchPipeline.deliver]] pass, as the
+    * reference's `MapEvents` posts in the bundle that maps
+    * (`M/main.py:145,151-162,274-277`): one job scans the batch, posts
+    * its good rows, and materializes the transform-DLQ and API-DLQ
+    * records with their per-channel row counts and the A3 counters.
+    * A writer is called only when its channel has rows, with a frame
+    * read from that materialized output: any number of actions on it
+    * never re-scan and never re-post. Posting is
+    * evaluation == delivery and AT-LEAST-ONCE: a retried task or a
+    * replayed micro-batch re-posts — downstream dedup is `$insert_id`,
+    * same posture as the reference (`M/main.py:272-273`). A writer that
+    * throws fails the query after the batch was posted, so its restart
+    * replays that batch.
     *
     * `onCounters` receives the A3 transform counters of every
     * micro-batch (`n_rows`/`n_dlq`/`missing_distinct_id`/
     * `ts_parse_errors`, `M/main.py:145,274-277`) — the streaming twin
-    * of `BatchPipeline.BatchCounters.transform`. Computed with one
-    * extra aggregation job per micro-batch over the (small) batch
-    * frame; pass the default no-op to skip it. */
+    * of `BatchPipeline.BatchCounters.transform`, observed on the
+    * delivery pass itself (no extra job). */
   def sinkStream(compiled: DataFrame, posterFactory: () => EventPoster,
       writeTransformDlq: DataFrame => Unit,
       writeApiDlq: DataFrame => Unit,
@@ -111,33 +120,10 @@ object StreamingPipeline {
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(triggerInterval))
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val ok = batch.filter(col("error").isNull)
-          .select(to_json(struct(col("event"), col("properties")))
-            .as("event_json"))
-        writeTransformDlq(
-          batch.filter(col("error").isNotNull).select("error.*"))
-        // Evaluation == delivery for the posting frame — so it is
-        // materialized HERE, once per micro-batch in the normal case.
-        // Handing the lazy frame to `writeApiDlq` would make delivery
-        // depend on the callback's action count: a no-op writer (api
-        // DLQ unset) would silently never post, a two-action writer
-        // would post twice. The guarantee is AT-LEAST-ONCE, same as the
-        // reference's retrying HTTP poster (`M/main.py:350-368`):
-        // persist() is non-reliable storage, so on a cluster a lost or
-        // evicted cached partition makes the writer's action recompute
-        // the posting mapPartitions and re-post that partition's
-        // batches. The import endpoint dedups on insert_id, which is
-        // why the reference (and this engine) don't pay a reliable
-        // checkpoint per 10-second micro-batch to upgrade it.
-        val apiDlq = BatchPipeline.post(ok, posterFactory).persist()
-        try {
-          apiDlq.count() // the posting job; runs once, fills the cache
-          writeApiDlq(apiDlq)
-        } finally apiDlq.unpersist() // writer threw ⇒ still unpin the cache
-        if (batch.columns.contains("_counters")) {
-          val row = graft.compile.CompiledEvents(batch).counters.collect()(0)
-          onCounters(row.schema.fieldNames.map(n =>
-            n -> row.getAs[Number](n).longValue).toMap)
-        }
+        val d = BatchPipeline.deliver(batch.sparkSession,
+          Seq(CompiledEvents(batch)), posterFactory)
+        if (d.channelRows("transform") > 0) writeTransformDlq(d.transformDlq)
+        if (d.channelRows("api") > 0) writeApiDlq(d.apiDlq)
+        onCounters(BatchPipeline.longs(d.counters.head))
       }
 }

@@ -51,7 +51,9 @@ final class EventBatchSink(
     jitter: () => Double = () => scala.util.Random.nextDouble())
   extends Serializable {
 
+  // each event is UTF-8 encoded once, on add; flush joins those bytes
   private val buffer = new ArrayBuffer[String]()
+  private val encoded = new ArrayBuffer[Array[Byte]]()
   private var bufferBytes = 0L
   private var sent = 0L
 
@@ -62,8 +64,10 @@ final class EventBatchSink(
   /** Append one serialized event; returns DLQ records if this append
     * triggered a flush that dead-lettered. */
   def add(eventJson: String): Seq[SinkDlqRecord] = {
+    val bytes = eventJson.getBytes(UTF_8)
     buffer += eventJson
-    bufferBytes += eventJson.getBytes(UTF_8).length
+    encoded += bytes
+    bufferBytes += bytes.length
     if (buffer.size >= batchSizeEvents || bufferBytes >= batchSizeBytes) flush()
     else Nil
   }
@@ -71,26 +75,25 @@ final class EventBatchSink(
   /** Flush any buffered events; returns DLQ records for failures. */
   def flush(): Seq[SinkDlqRecord] = {
     if (buffer.isEmpty) return Nil
-    val payload = buffer.mkString("\n")
-    val gz = EventBatchSink.gzip(payload.getBytes(UTF_8))
-    val batchCopy = buffer.toVector
+    val gz = EventBatchSink.gzip(EventBatchSink.joinLines(encoded, bufferBytes))
+    val n = buffer.size
     var retries = 0
     var dlq = Vector.empty[SinkDlqRecord]
     var done = false
     while (!done && retries < maxRetries) {
       val attempt =
-        try Some(poster.post(gz, batchCopy.size))
+        try Some(poster.post(gz, n))
         catch { case scala.util.control.NonFatal(_) => None }
       attempt match {
         case Some(r) if r.status == 200 =>
-          sent += batchCopy.size
+          sent += n
           done = true
         case Some(r) if r.status == 429 || r.status >= 500 =>
           retries += 1
           backoff(retries)
         case Some(r) => // non-retryable client error: dead-letter the batch
-          dlq = batchCopy.map(e => SinkDlqRecord(
-            s"client_error_${r.status}", r.body.take(500), e))
+          dlq = buffer.iterator.map(e => SinkDlqRecord(
+            s"client_error_${r.status}", r.body.take(500), e)).toVector
           done = true
         case None =>
           retries += 1
@@ -98,8 +101,10 @@ final class EventBatchSink(
       }
     }
     if (!done && retries == maxRetries)
-      dlq = batchCopy.map(e => SinkDlqRecord("max_retries_reached", "", e))
+      dlq = buffer.iterator.map(e =>
+        SinkDlqRecord("max_retries_reached", "", e)).toVector
     buffer.clear()
+    encoded.clear()
     bufferBytes = 0
     dlq
   }
@@ -113,6 +118,18 @@ object EventBatchSink {
   val DefaultBatchEvents = 2000
   /** `MP_BATCH_SIZE_BYTES` (`M/main.py:23`). */
   val DefaultBatchBytes: Long = 2L * 1024 * 1024
+
+  /** `lines` joined with '\n'; `bytes` is their total length. */
+  private def joinLines(lines: Iterable[Array[Byte]], bytes: Long): Array[Byte] = {
+    val out = new Array[Byte]((bytes + lines.size - 1).toInt)
+    var at = -1
+    lines.foreach { l =>
+      if (at >= 0) out(at) = '\n'
+      System.arraycopy(l, 0, out, at + 1, l.length)
+      at += l.length + 1
+    }
+    out
+  }
 
   def gzip(bytes: Array[Byte]): Array[Byte] = {
     val bos = new ByteArrayOutputStream()

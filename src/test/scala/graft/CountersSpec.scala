@@ -111,6 +111,41 @@ class CountersSpec extends SparkSpec {
     assert(res.apiDlq.count() == 0 && res.apiDlq.count() == 0)
   }
 
+  test("batch run + both DLQ writes scan each config's files once; " +
+      "counters equal the compiled frame's") {
+    val dir = Files.createTempDirectory("graft_once").toString
+    Seq(("click", 10L, "u1"), ("view", 20L, ""), ("", 30L, "u3"))
+      .toDF("event_type", "ts_epoch", "uid")
+      .write.mode("overwrite").parquet(s"$dir/a/part.parquet")
+    Seq(("buy", 40L, "u4"), ("", 50L, "u5"))
+      .toDF("event_type", "ts_epoch", "uid")
+      .write.mode("overwrite").parquet(s"$dir/b/part.parquet")
+    def cfg(id: String) = SourceConfig(
+      configId = id, sourcePrefix = s"$dir/$id/",
+      eventNameField = Some("event_type"),
+      fieldMappings = Seq(
+        FieldMapping("ts_epoch", "time", CastType.UnixTimestampAuto),
+        FieldMapping("uid", "$user_id", CastType.StringT)))
+    val cfgs = Seq(cfg("a"), cfg("b"))
+    val (res, read) = withScanRecords {
+      val res = BatchPipeline.run(spark,
+        cfgs.map(c => s"$dir/${c.configId}/part.parquet"), cfgs,
+        () => new CountingPoster)
+      res.transformDlq.write.json(s"$dir/dlq_transform")
+      res.apiDlq.write.json(s"$dir/dlq_api")
+      res
+    }
+    assert(read == 5L) // n_rows over both configs: one scan each
+    for (c <- cfgs) {
+      val row = ConfigCompiler.compile(c,
+        spark.read.parquet(s"$dir/${c.configId}/part.parquet"), opts)
+        .counters.collect()(0)
+      assert(res.counters.transformMetrics(c.configId) ==
+        row.schema.fieldNames.map(n => n -> row.getAs[Long](n)).toMap)
+    }
+    assert(spark.read.json(s"$dir/dlq_transform").count() == 2L)
+  }
+
   test("distributed routing matches driver-side routing") {
     val cfgs = Seq(
       SourceConfig("ca", "gs://b/a/"),

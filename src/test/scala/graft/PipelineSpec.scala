@@ -2,12 +2,14 @@ package graft
 
 import java.nio.file.Files
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.functions._
 
 import graft.compile.ConfigCompiler
 import graft.config.{CastType, FieldMapping, SourceConfig}
 import graft.pipeline.{BatchPipeline, StreamingPipeline}
-import graft.sink.{EventPoster, PostResult}
+import graft.sink.{EventPoster, PostResult, RecordingPoster}
 
 /** Top-level posters: must not capture the (non-serializable) suite. */
 private class Always400 extends EventPoster {
@@ -25,6 +27,13 @@ private class EventCountingPoster extends EventPoster {
   def post(gz: Array[Byte], nEvents: Int): PostResult = {
     PostedEvents.n.addAndGet(nEvents)
     PostResult(200, "ok")
+  }
+}
+/** Counts attempted events, then rejects the batch (API DLQ). */
+private class EventCounting400Poster extends EventPoster {
+  def post(gz: Array[Byte], nEvents: Int): PostResult = {
+    PostedEvents.n.addAndGet(nEvents)
+    PostResult(400, "rejected")
   }
 }
 
@@ -191,20 +200,114 @@ class PipelineSpec extends SparkSpec {
     q1.processAllAvailable()
     q1.stop()
     assert(PostedEvents.n.get == 2L) // both good rows posted, once each
-    // double-action writer: must NOT re-post
+    // double-action writer: must NOT re-post (a rejecting endpoint, so
+    // the API DLQ has rows and its writer runs)
     val dir2 = writeTempEvents()
     val schema2 = spark.read.parquet(s"$dir2/src/part.parquet").schema
     PostedEvents.n.set(0)
+    var apiRows = 0L
     val q2 = StreamingPipeline.sinkStream(
       StreamingPipeline.transformStream(
         spark, cfgFor(dir2), s"$dir2/src/part.parquet", schema2),
-      () => new EventCountingPoster, _ => (),
-      api => { api.count(); api.count() },
+      () => new EventCounting400Poster, _ => (),
+      api => { apiRows += api.count(); api.count() },
       triggerInterval = "1 seconds")
       .option("checkpointLocation", s"$dir2/ckpt_twice").start()
     q2.processAllAvailable()
     q2.stop()
+    assert(apiRows == 2L)
     assert(PostedEvents.n.get == 2L)
+  }
+
+  /** Run one streaming query over [[writeTempEvents]]' file to the end
+    * of its input; returns the records Spark read and the jobs it ran. */
+  private def streamOnce(dir: String, poster: () => EventPoster,
+      writeTransformDlq: org.apache.spark.sql.DataFrame => Unit,
+      writeApiDlq: org.apache.spark.sql.DataFrame => Unit,
+      onCounters: Map[String, Long] => Unit = _ => ()): (Long, Int) = {
+    val schema = spark.read.parquet(s"$dir/src/part.parquet").schema
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (q, read) = withScanRecords {
+        val q = StreamingPipeline.sinkStream(
+          StreamingPipeline.transformStream(
+            spark, cfgFor(dir), s"$dir/src/part.parquet", schema),
+          poster, writeTransformDlq, writeApiDlq,
+          triggerInterval = "1 seconds", onCounters = onCounters)
+          .option("checkpointLocation", s"$dir/ckpt_once").start()
+        try q.processAllAvailable() finally q.stop()
+        q
+      }
+      import scala.jdk.CollectionConverters._
+      (read, groups.asScala.count(_ == q.runId.toString))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("streaming micro-batch: one delivery job; counters equal the " +
+      "compiled frame's; writers get the old rows, none for an empty channel") {
+    val dir = writeTempEvents()
+    val compiled = ConfigCompiler.compile(cfgFor(dir),
+      spark.read.parquet(s"$dir/src/part.parquet"))
+    val dlqRows = ArrayBuffer.empty[org.apache.spark.sql.Row]
+    var apiCalls = 0
+    var counters = Map.empty[String, Long]
+    val (read, jobs) = streamOnce(dir, () => new Always200,
+      dlq => dlqRows ++= dlq.collect(), _ => apiCalls += 1,
+      onCounters = m => counters = m)
+    assert(read == 3L) // the batch's rows, scanned once
+    assert(jobs == 2)  // the delivery pass + the writer's collect
+    val want = compiled.counters.collect()(0)
+    assert(counters ==
+      want.schema.fieldNames.map(n => n -> want.getAs[Long](n)).toMap)
+    assert(dlqRows.toSeq == compiled.dlq.collect().toSeq)
+    assert(apiCalls == 0) // every post succeeded: API DLQ empty, not called
+  }
+
+  test("a DLQ writer that throws or runs two actions never re-posts") {
+    PostedEvents.n.set(0)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      streamOnce(writeTempEvents(), () => new EventCountingPoster,
+        _ => throw new IllegalStateException("dlq store down"), _ => ())
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("dlq store down")))
+    assert(PostedEvents.n.get == 2L) // posted once, before the writer
+    PostedEvents.n.set(0)
+    var dlqRows = 0L
+    streamOnce(writeTempEvents(), () => new EventCountingPoster,
+      dlq => {
+        dlqRows += dlq.count()
+        dlq.write.format("noop").mode("append").save()
+      }, _ => ())
+    assert(dlqRows == 1L)
+    assert(PostedEvents.n.get == 2L)
+  }
+
+  test("scripted 4xx: the API DLQ and the transform DLQ fill in the same run") {
+    val poster = () => new RecordingPoster(script = Seq(PostResult(400, "bad")))
+    val dir = writeTempEvents()
+    val res = BatchPipeline.run(spark, Seq(s"$dir/src/part.parquet"),
+      Seq(cfgFor(dir)), poster)
+    val json = res.eventsJson.as[String].collect().sorted.toSeq
+    assert(res.apiDlq.as[(String, String, String)].collect().sortBy(_._3).toSeq
+      == json.map(("client_error_400", "bad", _)))
+    assert(res.transformDlq.as[(String, String, String, String)].collect()
+      .map(_._1).toSeq == Seq("missing_dynamic_event_name"))
+    val m = res.counters.transformMetrics("t")
+    assert(m("n_rows") == 3L && m("n_dlq") == 1L)
+    // the streaming pass hands both channels over from one micro-batch
+    var transform, api = Seq.empty[org.apache.spark.sql.Row]
+    val (read, _) = streamOnce(writeTempEvents(), poster,
+      dlq => transform = dlq.collect().toSeq, a => api = a.collect().toSeq)
+    assert(read == 3L)
+    assert(transform.map(_.getString(0)) == Seq("missing_dynamic_event_name"))
+    assert(api.map(_.getString(0)) == Seq.fill(2)("client_error_400"))
   }
 
   test("ledger records only imported files; a corrupt file retries after " +

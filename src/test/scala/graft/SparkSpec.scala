@@ -15,4 +15,25 @@ trait SparkSpec extends AnyFunSuite {
 
   def sf(name: String): DataFrame =
     Tables(spark, "/root/testdata/sf0.001", name)
+
+  /** Runs `f`; returns its value and the records Spark's file scans read
+    * meanwhile — stages over a `FileScanRDD` only, since reading back
+    * cached or checkpointed blocks counts as records read too. */
+  def withScanRecords[T](f: => T): (T, Long) = {
+    val read = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+        val s = e.stageInfo
+        if (s.rddInfos.exists(_.name == "FileScanRDD") && s.taskMetrics != null)
+          read.addAndGet(s.taskMetrics.inputMetrics.recordsRead)
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = f
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      (r, read.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
