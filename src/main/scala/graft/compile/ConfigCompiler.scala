@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.config.{CastType, SourceConfig}
-import graft.functions.CastRules
+import graft.functions.{CastRules, PerQuery}
 
 /** Compiled result of applying a [[SourceConfig]] to an input frame.
   * One row per input row, with:
@@ -71,7 +71,10 @@ object ConfigCompiler {
     * (`M/main.py:184-293`) to a single Catalyst projection built once
     * per (config, schema): casts/renames/required-checks/defaults all
     * become codegen'd expressions, so per-row work is pure columnar
-    * compute — no interpretation, no UDFs. */
+    * compute — no interpretation, no UDFs. The generated code holds no
+    * per-query value (seed, clock), so a warm JVM re-runs it from
+    * Spark's codegen cache with no compile, as the reference builds
+    * `MapEvents` once per worker (`M/main.py:145`). */
   def compile(cfg: SourceConfig, input: DataFrame, opts: Options = Options()): CompiledEvents = {
     val schema = input.schema
     val fieldType: Map[String, DataType] =
@@ -114,12 +117,14 @@ object ConfigCompiler {
         lit(cfg.eventNameField.orNull))))
 
     // --- deterministic surrogates (SURVEY.md §7.5) -----------------------
+    // otherwise [[PerQuery]]: the query's time and seed reach generated
+    // code by reference, so Spark compiles the projection once per JVM
     val clock: Column =
       if (opts.deterministic) lit(opts.fixedClockEpoch)
-      else unix_timestamp(current_timestamp())
+      else PerQuery.unixNow
     def freshUuid: Column =
       if (opts.deterministic) md5(concat_ws("", lit(cfg.configId), originalRowJson))
-      else expr("uuid()")
+      else PerQuery.uuid
 
     val concrete = cfg.fieldMappings.filterNot(_.isWildcard)
 

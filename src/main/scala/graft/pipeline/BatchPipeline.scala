@@ -1,11 +1,15 @@
 package graft.pipeline
 
-import java.nio.charset.StandardCharsets.US_ASCII
+import scala.util.Try
 
-import scala.util.control.NonFatal
-
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Encoders, Observation, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.compile.{CompiledEvents, ConfigCompiler}
@@ -119,49 +123,103 @@ object BatchPipeline {
     (routed, matched, byName.getOrElse("__unmatched__", 0L))
   }
 
-  /** True iff `path` exists and carries the parquet magic footer. The
-    * per-file check mirrors the reference's per-file open/except
-    * (`M/main_batch.py:86-103`): a bad file is counted and skipped, the
-    * rest of the config's files still load. Driver-side 4-byte reads —
-    * exact accounting for backfills up to ~100k files; beyond that rely
-    * on `ignoreCorruptFiles` (always set on the scan) and forgo exact
-    * per-config counts. */
+  /** True iff `path` exists and its Parquet footer parses into a Spark
+    * schema (see [[footer]]). The per-file check mirrors the reference's
+    * per-file open/except (`M/main_batch.py:86-103`): a bad file — no
+    * `PAR1` magic, or a valid trailer over an unreadable footer — is
+    * counted and skipped, the rest of the config's files still load.
+    * The footers are read one file at a time before any job runs —
+    * exact accounting for backfills up to ~100k files; beyond that rely on `ignoreCorruptFiles` (always set
+    * on the scan) and forgo exact per-config counts. */
   def readableParquet(spark: SparkSession, path: String): Boolean =
-    try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val status = fs.getFileStatus(p)
-      // a directory (partitioned/committer layout) defers to the scan's
-      // ignoreCorruptFiles — the footer check is for single objects,
-      // which is what GCS notifications/globs deliver
-      if (status.isDirectory) return true
-      val len = status.getLen
-      len >= 8 && {
-        val in = fs.open(p)
-        try {
-          in.seek(len - 4)
-          val b = new Array[Byte](4)
-          in.readFully(b)
-          new String(b, US_ASCII) == "PAR1"
-        } finally in.close()
-      }
-    } catch { case NonFatal(_) => false }
+    Try(footer(spark, path)).isSuccess
+
+  /** `path`'s status and the Spark schema of its Parquet footer, parsed
+    * as schema inference parses it (`ParquetFileFormat.
+    * readSchemaFromFooter` with [[inferenceConverter]]); throws if
+    * either read fails. A directory (partitioned/committer
+    * layout) has no footer of its own and defers to the scan's
+    * `ignoreCorruptFiles` — the check is for single objects, which is
+    * what GCS notifications/globs deliver. */
+  private def footer(spark: SparkSession, path: String)
+      : (FileStatus, Option[StructType]) = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val status = p.getFileSystem(conf).getFileStatus(p)
+    if (status.isDirectory) (status, None)
+    else {
+      val meta = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(status, conf),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      (status, Some(ParquetFileFormat.readSchemaFromFooter(
+        new Footer(status.getPath, meta), inferenceConverter)))
+    }
+  }
+
+  /** The converter Spark's schema inference builds
+    * (`ParquetFileFormat.mergeSchemasInParallel`): these five session
+    * settings, the defaults for the rest (case sensitivity, field ids
+    * and variant annotations do not reach an inferred schema). */
+  private def inferenceConverter: ParquetToSparkSchemaConverter = {
+    val c = SQLConf.get
+    new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = c.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = c.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = c.parquetInferTimestampNTZEnabled,
+      nanosAsLong = c.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = c.parquetReaderRespectUnknownTypeAnnotation)
+  }
+
+  /** The schema Spark's inference would give a scan of `files` (each
+    * with its [[footer]]), without the inference job: with mergeSchema
+    * off, inference reads the footer of the first data file in path
+    * order only (`ParquetUtils.splitFiles` sorts the file index by
+    * `FileStatus.getPath.toString`, whatever order the paths came in).
+    * None — the scan infers — when that file is not among `files`: a
+    * directory (its children are listed by the scan), or a name the
+    * file index hides or treats as a summary file (`_*`, `.*`). */
+  private def scanSchema(files: Seq[(FileStatus, Option[StructType])])
+      : Option[StructType] = {
+    def hidden(name: String) =
+      name.startsWith("_") || name.startsWith(".") || name.endsWith("._COPYING_")
+    if (files.isEmpty || SQLConf.get.isParquetSchemaMergingEnabled ||
+        files.exists { case (st, schema) =>
+          schema.isEmpty || hidden(st.getPath.getName) }) None
+    else files.minBy(_._1.getPath.toString)._2
+  }
+
+  /** [[scanSchema]] of `paths` as given, unchecked: None (the scan
+    * infers) unless every path's [[footer]] reads. */
+  private[graft] def footerScanSchema(spark: SparkSession, paths: Seq[String])
+      : Option[StructType] =
+    Try(paths.map(footer(spark, _))).toOption.flatMap(scanSchema)
+
+  /** The footer check of each config's paths: the readable ones, the
+    * corrupt count, and the scan schema the readable footers give. */
+  private final case class Checked(readable: Seq[String], corrupt: Long,
+      schema: Option[StructType])
+
+  private def checkFooters(spark: SparkSession,
+      routed: Map[SourceConfig, Seq[String]]): Map[SourceConfig, Checked] =
+    routed.map { case (cfg, paths) =>
+      val read = paths.map(p => p -> Try(footer(spark, p)).toOption)
+      val good = read.collect { case (p, Some(f)) => (p, f) }
+      cfg -> Checked(good.map(_._1), (paths.size - good.size).toLong,
+        scanSchema(good.map(_._2)))
+    }
 
   /** Split each config's paths into (readable, corrupt-count). */
   def isolateCorrupt(spark: SparkSession,
       routed: Map[SourceConfig, Seq[String]])
-      : (Map[SourceConfig, Seq[String]], Map[String, Long]) = {
-    val checked = routed.map { case (cfg, paths) =>
-      val (good, bad) = paths.partition(readableParquet(spark, _))
-      (cfg, good, bad.size.toLong)
-    }
-    (checked.collect { case (cfg, good, _) if good.nonEmpty =>
-      cfg -> good
-    }.toMap,
-      checked.collect { case (cfg, _, bad) if bad > 0 =>
-        cfg.configId -> bad
-      }.toMap)
-  }
+      : (Map[SourceConfig, Seq[String]], Map[String, Long]) =
+    splitChecked(checkFooters(spark, routed))
+
+  private def splitChecked(checked: Map[SourceConfig, Checked])
+      : (Map[SourceConfig, Seq[String]], Map[String, Long]) =
+    (checked.collect { case (cfg, c) if c.readable.nonEmpty =>
+      cfg -> c.readable },
+      checked.collect { case (cfg, c) if c.corrupt > 0 =>
+        cfg.configId -> c.corrupt })
 
   /** Transform stage with NO driver-side file list at all — the shape
     * for lakes past [[routeUriFrame]]'s collect (10⁷-10⁸ objects,
@@ -246,7 +304,10 @@ object BatchPipeline {
       routed: Map[SourceConfig, Seq[String]],
       opts: ConfigCompiler.Options = ConfigCompiler.Options())
       : (DataFrame, DataFrame, Map[String, Observation]) = {
-    val parts = compiledScans(spark, routed, opts).map { case (id, compiled) =>
+    val scans = routed.map { case (cfg, paths) =>
+      cfg -> (paths, footerScanSchema(spark, paths))
+    }
+    val parts = compiledScans(spark, scans, opts).map { case (id, compiled) =>
       val obs = Observation()
       (compiled.observed(obs).json, compiled.dlq, id -> obs)
     }
@@ -255,18 +316,21 @@ object BatchPipeline {
       parts.map(_._3).toMap)
   }
 
-  /** One vectorized scan per config with files, compiled; by config id. */
+  /** One vectorized scan per config with files, compiled; by config id.
+    * A scan with a known schema ([[scanSchema]]) is read with it, which
+    * saves the schema-inference job Spark would run per config to read
+    * that same footer. */
   private def compiledScans(spark: SparkSession,
-      routed: Map[SourceConfig, Seq[String]], opts: ConfigCompiler.Options)
-      : Seq[(String, CompiledEvents)] =
-    routed.toSeq.sortBy(_._1.configId).filter(_._2.nonEmpty)
-      .map { case (cfg, paths) =>
-        val input = spark.read
+      scans: Map[SourceConfig, (Seq[String], Option[StructType])],
+      opts: ConfigCompiler.Options): Seq[(String, CompiledEvents)] =
+    scans.toSeq.sortBy(_._1.configId).filter(_._2._1.nonEmpty)
+      .map { case (cfg, (paths, schema)) =>
+        val reader = spark.read
           // corrupt-file isolation at the scan too (S6): a file that
           // passed the footer check but has a rotten page must not fail
           // the whole config (`M/main_batch.py:100-103`)
           .option("ignoreCorruptFiles", "true")
-          .parquet(paths: _*)
+        val input = schema.fold(reader)(reader.schema).parquet(paths: _*)
         cfg.configId -> ConfigCompiler.compile(cfg, input, opts)
       }
 
@@ -274,7 +338,10 @@ object BatchPipeline {
     * read back from its materialized output, the A3 transform counters
     * of each compiled input (in input order) and the output's row count
     * per channel (`transform`, `api`). All are complete when [[deliver]]
-    * returns; reading them never re-posts. */
+    * returns; reading them never re-posts. Each channel frame is sized
+    * to its rows: an empty channel is an empty local frame (a write of
+    * it runs one task), a non-empty one is coalesced to at most one
+    * wave of tasks, never to a single-task funnel. */
   final case class Delivery(
       transformDlq: DataFrame,
       apiDlq: DataFrame,
@@ -314,9 +381,17 @@ object BatchPipeline {
       .observe(rows, count(col("error")).as("transform"),
         count(col("api")).as("api"))
       .localCheckpoint(true)
-    Delivery(output.filter(col("error").isNotNull).select("error.*"),
-      output.filter(col("api").isNotNull).select("api.*"),
-      counters, longs(rows))
+    val channelRows = longs(rows)
+    // the checkpoint keeps one partition per scan partition; a DLQ write
+    // over it would run that many tasks, most of them empty
+    def channel(tag: String, name: String): DataFrame = {
+      val records = output.filter(col(tag).isNotNull).select(s"$tag.*")
+      if (channelRows(name) == 0)
+        spark.createDataFrame(java.util.List.of[Row](), records.schema)
+      else records.coalesce(spark.sparkContext.defaultParallelism)
+    }
+    Delivery(channel("error", "transform"), channel("api", "api"),
+      counters, channelRows)
   }
 
   /** The schema of an API dead-letter record (`M/main.py:377-400`). */
@@ -387,8 +462,10 @@ object BatchPipeline {
           firstMatches.count(_ == c.configId).toLong).toMap
         (r, firstCounts, (uris.size - firstMatches.size).toLong)
       }
-    val (readable, readErrors) = isolateCorrupt(spark, routed)
-    val scans = compiledScans(spark, readable, opts)
+    val checked = checkFooters(spark, routed)
+    val (readable, readErrors) = splitChecked(checked)
+    val scans = compiledScans(spark,
+      checked.map { case (cfg, c) => cfg -> (c.readable, c.schema) }, opts)
     val d = deliver(spark, scans.map(_._2), posterFactory, postParallelism)
     Result(
       scans.map(_._2.json).reduceOption(_ union _).getOrElse(emptyJson(spark)),

@@ -20,10 +20,12 @@ import org.apache.spark.sql.functions._
   */
 object FileLedger {
 
-  /** Empty-safe read of the ledger table. */
+  /** Empty-safe read of the ledger table, with its declared schema: an
+    * inferred one would cost a Spark job per read to learn one column.
+    * A missing directory reads as empty; so does an empty one. */
   def read(spark: SparkSession, ledgerDir: String): DataFrame = {
     import spark.implicits._
-    try spark.read.parquet(ledgerDir).select(col("uri"))
+    try spark.read.schema("uri STRING").parquet(ledgerDir)
     catch { case _: Exception => spark.emptyDataset[String].toDF("uri") }
   }
 

@@ -111,6 +111,35 @@ class CountersSpec extends SparkSpec {
     assert(res.apiDlq.count() == 0 && res.apiDlq.count() == 0)
   }
 
+  test("a valid PAR1 trailer over an unreadable footer is a read error, " +
+      "not a failed run") {
+    val dir = Files.createTempDirectory("graft_footer")
+    // the good file, and a copy whose footer is zeroed between its
+    // length field and the data: magic bytes and length stay valid
+    val good = writeFlat(Seq(("click", 10L, "u1"), ("view", 20L, "u2"))
+      .toDF("event_type", "ts_epoch", "uid"), dir.resolve("b_good.parquet"))
+    val bytes = Files.readAllBytes(good)
+    val footerLen = java.nio.ByteBuffer.wrap(bytes, bytes.length - 8, 4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+    java.util.Arrays.fill(bytes, bytes.length - 8 - footerLen, bytes.length - 8, 0.toByte)
+    val bad = Files.write(dir.resolve("a_bad.parquet"), bytes)
+    assert(new String(bytes.takeRight(4), "US-ASCII") == "PAR1")
+    assert(!BatchPipeline.readableParquet(spark, bad.toString))
+    val cfg = SourceConfig(
+      configId = "t", sourcePrefix = s"$dir/",
+      eventNameField = Some("event_type"),
+      fieldMappings = Seq(FieldMapping("uid", "$user_id", CastType.StringT)))
+    // either path order: the scan's own inference would read the
+    // lexicographically first file, the bad one
+    for (uris <- Seq(Seq(bad, good), Seq(good, bad)).map(_.map(_.toString))) {
+      val res = BatchPipeline.run(spark, uris, Seq(cfg), () => new CountingPoster)
+      assert(res.counters.readErrors == Map("t" -> 1L))
+      assert(res.imported == Seq(good.toString))
+      assert(res.counters.transformMetrics("t")("n_rows") == 2L)
+      assert(res.eventsJson.count() == 2L)
+    }
+  }
+
   test("batch run + both DLQ writes scan each config's files once; " +
       "counters equal the compiled frame's") {
     val dir = Files.createTempDirectory("graft_once").toString

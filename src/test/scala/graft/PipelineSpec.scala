@@ -134,20 +134,10 @@ class PipelineSpec extends SparkSpec {
     assert(counters("n_rows") == 3L && counters("n_dlq") == 1L)
   }
 
-  /** Write `rows` as ONE flat parquet file at `target` (the shape GCS
-    * notifications deliver — a single object, not a writer directory). */
+  /** Write `rows` as ONE flat parquet file at `target`. */
   private def writeFlatParquet(target: java.nio.file.Path,
-      rows: Seq[(String, Long, String)]): Unit = {
-    import scala.jdk.CollectionConverters._
-    val tmp = Files.createTempDirectory("graft_flat")
-    rows.toDF("event_type", "ts_epoch", "uid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/out")
-    val part = Files.list(java.nio.file.Paths.get(s"$tmp/out"))
-      .iterator().asScala
-      .find(p => p.getFileName.toString.startsWith("part-") &&
-        p.toString.endsWith(".parquet")).get
-    Files.copy(part, target)
-  }
+      rows: Seq[(String, Long, String)]): Unit =
+    writeFlat(rows.toDF("event_type", "ts_epoch", "uid"), target)
 
   test("streaming routing: shared watch dir, each file mapped exactly once " +
       "by its first matching config") {
@@ -308,6 +298,21 @@ class PipelineSpec extends SparkSpec {
     assert(read == 3L)
     assert(transform.map(_.getString(0)) == Seq("missing_dynamic_event_name"))
     assert(api.map(_.getString(0)) == Seq.fill(2)("client_error_400"))
+  }
+
+  test("file ledger reads with its declared schema: no job; a missing or " +
+      "empty directory reads as empty") {
+    import graft.pipeline.FileLedger
+    val root = Files.createTempDirectory("graft_ledger_read")
+    val led = s"$root/led"
+    FileLedger.record(spark, Seq("gs://a/1"), led)
+    Files.createDirectory(root.resolve("empty"))
+    val (frames, jobs, _) = withJobsAndTasks(
+      Seq(led, s"$root/missing", s"$root/empty").map(FileLedger.read(spark, _)))
+    assert(jobs == 0)
+    assert(frames.map(_.columns.toSeq) == Seq.fill(3)(Seq("uri")))
+    assert(frames.map(_.as[String].collect().toSeq) ==
+      Seq(Seq("gs://a/1"), Nil, Nil))
   }
 
   test("ledger records only imported files; a corrupt file retries after " +
