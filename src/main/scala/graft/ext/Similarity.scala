@@ -256,10 +256,11 @@ object Similarity {
     // ⌈n/entries⌉ block of the corpus id order, the same spread
     // insertion uses (the role HNSW's upper layers play). Through
     // round 15 this default was the `entries` SMALLEST ids (the IVF
-    // seed convention); `tools/GraphServeAb` measured that clustered
-    // low-id entries are what capped post-append serving — same
-    // 8-entry/3-hop budget, stratified vs smallest: self_found
-    // 0.86 → 1.00, walk_top10 0.494 → 0.658. Entry PLACEMENT, not
+    // seed convention); the round-16 serving A/B (SURVEY.md,
+    // "Round-16 notes") measured that clustered low-id entries are
+    // what capped post-append serving — same 8-entry/3-hop budget,
+    // stratified vs smallest: self_found 0.86 → 1.00, walk_top10
+    // 0.494 → 0.658. Entry PLACEMENT, not
     // orphaned inserts, was the serving ceiling. Callers may still
     // pass an explicit (cand) entry frame.
     val entry = entriesDf.map(_.select(col("cand"))).getOrElse {

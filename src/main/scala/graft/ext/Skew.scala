@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 /** Skew mitigation for shuffle joins.
   *
   * A hot join key sends its whole partition to one reducer. WHEN to
-  * reach for manual salting is evidence-based (A/B harness:
-  * [[graft.tools.SkewAb]], measured round 7 on a 12M-row join with
-  * 90% of rows on one key):
+  * reach for manual salting is evidence-based (round-7 A/B on a
+  * 12M-row join with 90% of rows on one key; decision record: the
+  * "skew mitigation decision record" row of SURVEY.md):
   *
   *  - Plain hot-key DIMENSION equi-join: AQE's OptimizeSkewedJoin
   *    splits the skewed partition by map-output bytes — it can split

@@ -221,6 +221,11 @@ object BatchPipeline {
       checked.collect { case (cfg, c) if c.corrupt > 0 =>
         cfg.configId -> c.corrupt })
 
+  /** Escape Hadoop glob metacharacters so a literal file-name prefix
+    * embeds safely in a glob pattern. */
+  private def globEscape(s: String): String =
+    s.flatMap(c => if ("*?[]{}\\".contains(c)) s"\\$c" else c.toString)
+
   /** Transform stage with NO driver-side file list at all — the shape
     * for lakes past [[routeUriFrame]]'s collect (10⁷-10⁸ objects,
     * where even the routed path list is a driver-memory hazard). Each
@@ -244,11 +249,6 @@ object BatchPipeline {
     *
     * Returns the same (json, dlq, observations) shape as
     * [[transformObserved]]. */
-  /** Escape Hadoop glob metacharacters so a literal file-name prefix
-    * embeds safely in a glob pattern. */
-  private def globEscape(s: String): String =
-    s.flatMap(c => if ("*?[]{}\\".contains(c)) s"\\$c" else c.toString)
-
   def transformPrefixScans(spark: SparkSession, configs: Seq[SourceConfig],
       opts: ConfigCompiler.Options = ConfigCompiler.Options())
       : (DataFrame, DataFrame, Map[String, Observation]) = {
@@ -293,13 +293,6 @@ object BatchPipeline {
     * across configs (both have config-independent schemas). Each
     * config's frame carries an [[Observation]] with the A3 transform
     * counters. */
-  def transform(spark: SparkSession, routed: Map[SourceConfig, Seq[String]],
-      opts: ConfigCompiler.Options = ConfigCompiler.Options())
-      : (DataFrame, DataFrame) = {
-    val (json, dlq, _) = transformObserved(spark, routed, opts)
-    (json, dlq)
-  }
-
   def transformObserved(spark: SparkSession,
       routed: Map[SourceConfig, Seq[String]],
       opts: ConfigCompiler.Options = ConfigCompiler.Options())

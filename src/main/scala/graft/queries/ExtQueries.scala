@@ -56,7 +56,7 @@ object ExtQueries {
     * where residuals win) before picking the layout. */
   // The four PQ top-10 stacks below each serve THREE consumers (their
   // own gate plus ann_residual_recall_audit / ann_opq_recall and the
-  // off-seed audit), so they ride the sharedFrames persist-once
+  // off-seed audit), so they ride the SharedFrames persist-once
   // pattern — the first consumer builds, the audits read back.
   //
   // Each build trains ONCE and serves BOTH query bands (the seed band
@@ -76,7 +76,7 @@ object ExtQueries {
 
   private def pqSeedResidualFrames(spark: SparkSession, dir: String)
       : Map[String, DataFrame] =
-    sharedFrames(spark, dir, "pq_seed_residual_topk") {
+    SharedFrames(spark, dir, "pq_seed_residual_topk") {
       val emb = Tables(spark, dir, "embeddings")
       splitBands(Similarity.ivfPqResidualTopK(emb, col("vec_id"),
         col("embedding"), emb.filter(bothBands), col("vec_id"),
@@ -88,7 +88,7 @@ object ExtQueries {
 
   private def pqTrainedResidualFrames(spark: SparkSession, dir: String)
       : Map[String, DataFrame] =
-    sharedFrames(spark, dir, "pq_trained_residual_topk") {
+    SharedFrames(spark, dir, "pq_trained_residual_topk") {
       val emb = Tables(spark, dir, "embeddings")
       val cent = Similarity.kmeansCentroids(emb, col("vec_id"),
         col("embedding"), numCells = 16, iters = 3, sampleMod = 4)
@@ -102,7 +102,7 @@ object ExtQueries {
 
   private def pqFlatFrames(spark: SparkSession, dir: String)
       : Map[String, DataFrame] =
-    sharedFrames(spark, dir, "pq_flat_topk") {
+    SharedFrames(spark, dir, "pq_flat_topk") {
       val emb = Tables(spark, dir, "embeddings")
       val queries = emb.filter(bothBands)
       val (cbs, codes) = Similarity.buildPqIndex(emb, col("vec_id"),
@@ -122,7 +122,7 @@ object ExtQueries {
 
   private def opqIvfPqFrames(spark: SparkSession, dir: String)
       : Map[String, DataFrame] =
-    sharedFrames(spark, dir, "opq_ivf_pq_topk") {
+    SharedFrames(spark, dir, "opq_ivf_pq_topk") {
       val emb = Tables(spark, dir, "embeddings")
       val rotated = Tables.materialize(
         Similarity.opqRotate(emb, col("vec_id"), col("embedding"),
@@ -154,8 +154,9 @@ object ExtQueries {
     * rides a fixture artifact: the gate's queries (vec_id < 10) are
     * THEMSELVES seed centroids, so seed cells are query-centered
     * (near-zero residual and an exact coarse term for each query's
-    * own cell). [[graft.tools.ResidualAb]] re-runs the same A/B over
-    * query bands that are NOT seed ids: trained wins every band
+    * own cell). The round-14 off-seed A/B (SURVEY.md, "Round 14")
+    * re-ran the same comparison over query bands that are NOT seed
+    * ids: trained wins every band
     * (45/48/49 vs seed's 38/39/37 hits of 100 at bands 100/200/300) —
     * the Lloyd's rounds buy ~+25% relative recall for the residual
     * layout on honest queries, even on this near-uniform corpus. */
@@ -171,8 +172,8 @@ object ExtQueries {
     * compression loss; the trained−seed gap is what the Lloyd's
     * rounds buy the residual layout — on THIS gate's query band it
     * reads inverted because the queries double as seed centroids (see
-    * [[annIvfPqTrained]]'s scaladoc and [[graft.tools.ResidualAb]],
-    * which shows trained > seed on every off-seed band). One
+    * [[annIvfPqTrained]]'s scaladoc and the round-14 off-seed A/B in
+    * SURVEY.md, which shows trained > seed on every off-seed band). One
     * brute-force truth set, three candidate stacks. */
   def annResidualRecallAudit(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables(spark, dir, "embeddings")
@@ -225,7 +226,7 @@ object ExtQueries {
     * [0, 64) ∩ 4ℤ). Each stack is the SAME persisted frame its own
     * gate serves, sliced at the off-seed band (training ran once for
     * both bands). On honest queries the Lloyd's rounds win: trained ≥
-    * seed here, matching [[graft.tools.ResidualAb]]'s off-gate sweep
+    * seed here, matching the round-14 off-gate sweep (SURVEY.md)
     * (45/48/49 vs 38/39/37 of 100 at bands 100/200/300) — the
     * seed-band gate stays as the documented fixture-artifact
     * demonstration. */
@@ -257,7 +258,7 @@ object ExtQueries {
     * gate reads. */
   private def nnDescentFrames(spark: SparkSession, dir: String)
       : Map[String, DataFrame] =
-    sharedFrames(spark, dir, "nndescent_knn") {
+    SharedFrames(spark, dir, "nndescent_knn") {
       val emb = Tables(spark, dir, "embeddings")
       val st = Similarity.nnDescentStates(emb,
         col("vec_id"), col("embedding"), k = 8, rounds = 4)
@@ -270,7 +271,7 @@ object ExtQueries {
     * sfDir) from one 4-round pass. */
   private def nnDescentK16Frames(spark: SparkSession, dir: String)
       : Map[String, DataFrame] =
-    sharedFrames(spark, dir, "nndescent_k16") {
+    SharedFrames(spark, dir, "nndescent_k16") {
       val emb = Tables(spark, dir, "embeddings")
       val st = Similarity.nnDescentStates(emb,
         col("vec_id"), col("embedding"), k = 16, rounds = 4)
@@ -284,7 +285,7 @@ object ExtQueries {
     * one brute pass per gate. */
   private def offseedTruth10(spark: SparkSession, dir: String)
       : DataFrame =
-    sharedFrames(spark, dir, "offseed_truth10") {
+    SharedFrames(spark, dir, "offseed_truth10") {
       val emb = Tables(spark, dir, "embeddings")
       Seq("truth" -> Similarity.bruteForceTopK(emb,
           col("vec_id"), col("embedding"),
@@ -298,7 +299,7 @@ object ExtQueries {
     * both the NN-Descent recall audit and the parameter sweep grade
     * against, persisted once. */
   private def knnTruth8(spark: SparkSession, dir: String): DataFrame =
-    sharedFrames(spark, dir, "knn_truth8") {
+    SharedFrames(spark, dir, "knn_truth8") {
       val emb = Tables(spark, dir, "embeddings")
       Seq("truth" -> Similarity.bruteForceKnnTruth(emb,
           col("vec_id"), col("embedding"),
@@ -320,7 +321,7 @@ object ExtQueries {
   private def servingGraph(spark: SparkSession, dir: String)
       : DataFrame = {
     val k16r4 = nnDescentK16Frames(spark, dir)("r4")
-    sharedFrames(spark, dir, "graph_diverse8") {
+    SharedFrames(spark, dir, "graph_diverse8") {
       val emb = Tables(spark, dir, "embeddings")
       Seq("diverse8" -> Similarity.diversifyGraph(emb,
         col("vec_id"), col("embedding"), k16r4, degree = 8))
@@ -334,7 +335,7 @@ object ExtQueries {
     * recall while the diversify audit had already measured 0.79 from
     * the same slots) — 8 STRATIFIED entries (one per ⌈n/8⌉ block of
     * the id order; the smallest-8 convention through round 15 was
-    * measured by [[graft.tools.GraphServeAb]] to be the walk's
+    * measured by the round-16 serving A/B (SURVEY.md) to be the walk's
     * ceiling), beam 16, 3 hops, top-10 out — for the off-seed query
     * band [100, 110) (disjoint from the entry set at every SF:
     * stride ≥ n/8 ≥ 62 > 110's first stratum, so every hit is a
@@ -378,7 +379,7 @@ object ExtQueries {
       "hop1" -> walk(1), "hop2" -> walk(2), "hop3" -> walk(3)))
   }
 
-  /** Serving-ENTRY sweep — the knob round 16's `GraphServeAb` A/B
+  /** Serving-ENTRY sweep — the knob round 16's serving A/B (SURVEY.md)
     * surfaced as the real serving ceiling, recorded as a gated
     * frontier: recall@10 of the same beam-16/3-hop walk over the
     * DEPLOYED serving store ([[servingGraph]]) at entries ∈
@@ -491,7 +492,7 @@ object ExtQueries {
     * the streaming maintenance gate. */
   private def graphAppendFrames(spark: SparkSession, dir: String)
       : Map[String, DataFrame] =
-    sharedFrames(spark, dir, "graph_append") {
+    SharedFrames(spark, dir, "graph_append") {
       val emb = Tables(spark, dir, "embeddings")
       val base = emb.filter(col("vec_id") % 10 =!= 9)
       val appended = emb.filter(col("vec_id") % 10 === 9)
@@ -529,10 +530,11 @@ object ExtQueries {
     * adopts true orphans (the HNSW insert heuristic — zero on this
     * corpus, every insert already had 7-8 adopters, but the repair
     * guards the clustered case the spec pins), and (b)
-    * [[graft.tools.GraphServeAb]] attributed the actual miss to the
-    * smallest-8 SERVING-entry convention — stratified entries at the
-    * same 8-entry/3-hop budget lift self_found 0.86 → 1.00 and
-    * walk_top10 0.494 → 0.658 (now the beam-search default).
+    * the round-16 serving A/B (SURVEY.md, "Round-16 notes")
+    * attributed the actual miss to the smallest-8 SERVING-entry
+    * convention — stratified entries at the same 8-entry/3-hop
+    * budget lift self_found 0.86 → 1.00 and walk_top10 0.494 → 0.658
+    * (now the beam-search default).
     * `recall` grades the same walks against the full-corpus
     * brute-force top-10. One readout row per measure; the merged
     * graph is pure column algebra over the shared frames. Round 17
@@ -629,7 +631,7 @@ object ExtQueries {
       : Map[String, DataFrame] = {
     // resolve the serving-store tier BEFORE entering this build block
     val store = servingGraph(spark, dir)
-    sharedFrames(spark, dir, "graph_delete") {
+    SharedFrames(spark, dir, "graph_delete") {
       val emb = Tables(spark, dir, "embeddings")
       val del = emb.filter(col("vec_id") % 10 === 4)
         .select(col("vec_id"))
@@ -808,7 +810,7 @@ object ExtQueries {
       : Map[String, DataFrame] = {
     // resolve the graph_append tier BEFORE entering this build block
     val g0 = graphAppendBaseGraph(spark, dir)
-    sharedFrames(spark, dir, "graph_stale") {
+    SharedFrames(spark, dir, "graph_stale") {
       val emb = Tables(spark, dir, "embeddings")
       val standing = emb.filter(col("vec_id") % 10 =!= 9)
         .select(col("vec_id"), col("embedding"))
@@ -1043,15 +1045,16 @@ object ExtQueries {
     * pq_opq 0.64 — the honest null (the corpus is near-uniform on
     * the sphere, so the reflection spreads noise, not signal). The
     * spec's anisotropic fixture proves the variance-SPREADING
-    * contract; [[graft.tools.OpqAnisoAb]] then tests whether the
-    * spread converts to an ADC-recall win on gain-scaled corpora and
-    * REFUTES it for this one-reflection form (raw ≥ opq at every
-    * gain: 65/54/47 vs 64/52/40 at g = 4/8/16) — for inner-product
+    * contract; the OPQ anisotropic A/B (SURVEY.md, "Round-15 notes")
+    * tested whether the spread converts to an ADC-recall win on
+    * gain-scaled corpora and REFUTED it for this one-reflection form
+    * (raw ≥ opq at every gain: 65/54/47 vs 64/52/40 at g = 4/8/16) —
+    * for inner-product
     * ADC, concentrating a single dominant direction in one codebook
     * can beat balancing it across all m; full OPQ's recall win needs
     * the alternating rotation/codebook solve. That is why no
     * anisotropic recall GATE exists: it would record the same
-    * direction as this null, and the evidence lives in the tool. */
+    * direction as this null, and the evidence lives in SURVEY.md. */
   def annOpqRecall(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables(spark, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < 10)
@@ -1182,7 +1185,7 @@ object ExtQueries {
     * elimination). */
   private[queries] def htmlExtractFrames(spark: SparkSession,
       dir: String): DataFrame =
-    sharedFrames(spark, dir, "html_extract") {
+    SharedFrames(spark, dir, "html_extract") {
       Seq("ex" -> Corpus.htmlExtract(
         plantedHtml(Tables(spark, dir, "documents")),
         col("doc_id"), col("html")))
@@ -1517,24 +1520,6 @@ object ExtQueries {
           .as("reorder_only"))
   }
 
-  /** Shared exact-Jaccard truth set (n = 3, τ = 0.5) for the three
-    * audit gates that grade candidate generators against it
-    * ([[winnowRecallAudit]], [[dedupFamilyCompare]], [[lshPairPr]]):
-    * the truth set is the expensive frame each audit used to rebuild
-    * independently (three Σdf²-dispatched exact joins per run), so the
-    * FIRST caller in a JVM computes it once and persists it to
-    * driver-local scratch parquet; later callers read it back. Keyed
-    * by (applicationId, sfDir) so a fresh session or a different SF
-    * never serves stale pairs; the audits' outputs are byte-identical
-    * either way (same pairs, same aggregates). At 100 TB this is the
-    * same shape deliberately: one persisted truth tier that every
-    * audit reads, not a per-audit recompute. */
-  /** Delegates to the hoisted [[SharedFrames]] tier (shared with
-    * CorpusQueries' trained-vocab frames). */
-  private def sharedFrames(spark: SparkSession, dir: String, name: String)
-      (build: => Seq[(String, DataFrame)]): Map[String, DataFrame] =
-    SharedFrames(spark, dir, name)(build)
-
   /** Shared document tokenization tier — the (id, toks) frame and its
     * n = 3 distinct-gram explosion, built ONCE per run and read by
     * every doc-level sketch family (Jaccard, MinHash, SimHash,
@@ -1546,7 +1531,7 @@ object ExtQueries {
   private[queries] def docToksFrames(spark: SparkSession, dir: String)
       : Map[String, DataFrame] = {
     val p = spark.sparkContext.defaultParallelism
-    sharedFrames(spark, dir, "doc_toks") {
+    SharedFrames(spark, dir, "doc_toks") {
       val toked = graft.Tables.materialize(
         Dedup.tokenize(Tables(spark, dir, "documents"),
           col("doc_id"), col("text")))
@@ -1561,10 +1546,23 @@ object ExtQueries {
     * the bench's built_frames attribution has carried since r15);
     * only its persisted columns widened from (id1, id2) to the full
     * (id1, id2, jaccard). doc_toks is resolved BEFORE the build:
-    * SharedFrames tiers must never nest (computeIfAbsent). */
+    * SharedFrames tiers must never nest (computeIfAbsent).
+    *
+    * It is the exact-Jaccard truth set for the three audit gates that
+    * grade candidate generators against it ([[winnowRecallAudit]],
+    * [[dedupFamilyCompare]], [[lshPairPr]]): the truth set is the
+    * expensive frame each audit used to rebuild independently (three
+    * Σdf²-dispatched exact joins per run), so the FIRST caller in a JVM
+    * computes it once and persists it to driver-local scratch parquet;
+    * later callers read it back. Keyed by (applicationId, sfDir) so a
+    * fresh session or a different SF never serves stale pairs; the
+    * audits' outputs are byte-identical either way (same pairs, same
+    * aggregates). At 100 TB this is the same shape deliberately: one
+    * persisted truth tier that every audit reads, not a per-audit
+    * recompute. */
   private def jaccardPairs3(spark: SparkSession, dir: String): DataFrame = {
     val grams3 = docToksFrames(spark, dir)("grams3")
-    sharedFrames(spark, dir, "jaccard_truth") {
+    SharedFrames(spark, dir, "jaccard_truth") {
       Seq("pairs" -> Dedup.ngramJaccardPairsFromGrams(grams3,
         threshold = 0.5))
     }("pairs")
@@ -1581,7 +1579,7 @@ object ExtQueries {
   private[queries] def minhash3Frames(spark: SparkSession, dir: String)
       : Map[String, DataFrame] = {
     val grams3 = docToksFrames(spark, dir)("grams3")
-    sharedFrames(spark, dir, "minhash3") {
+    SharedFrames(spark, dir, "minhash3") {
       val bands = graft.Tables.materialize(
         Dedup.minhashBandRows(grams3, numHashes = 16, rowsPerBand = 4))
       Seq("bands" -> bands,
@@ -1598,7 +1596,7 @@ object ExtQueries {
     * nest). */
   private def grams2Frames(spark: SparkSession, dir: String): DataFrame = {
     val toks = docToksFrames(spark, dir)("toks")
-    sharedFrames(spark, dir, "grams2") {
+    SharedFrames(spark, dir, "grams2") {
       Seq("grams" -> Dedup.shinglesFromToks(toks, 2))
     }("grams")
   }
@@ -1618,7 +1616,7 @@ object ExtQueries {
     * 64) re-band the same persisted sketch. */
   private def simhashSketch(spark: SparkSession, dir: String): DataFrame = {
     val toks = docToksFrames(spark, dir)("toks")
-    sharedFrames(spark, dir, "simhash_sketch") {
+    SharedFrames(spark, dir, "simhash_sketch") {
       Seq("sketch" -> Dedup.simhashFromToks(toks))
     }("sketch")
   }
@@ -1635,7 +1633,7 @@ object ExtQueries {
     * nothing. */
   private def dedupCore(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    val m = sharedFrames(spark, dir, "dedup_core") {
+    val m = SharedFrames(spark, dir, "dedup_core") {
       val (s, v) = Dedup.dedupSurvivorsAndVerified(
         Tables(spark, dir, "documents"), col("doc_id"), col("text"),
         n = 3, jaccardThreshold = 0.8)
@@ -1649,7 +1647,7 @@ object ExtQueries {
     * (embed_neardup_lsh itself, SemDeDup CC, DBSCAN, k-core,
     * triangles, two-hop). */
   private def embedPairs(spark: SparkSession, dir: String): DataFrame =
-    sharedFrames(spark, dir, "embed_pairs") {
+    SharedFrames(spark, dir, "embed_pairs") {
       Seq("pairs" -> Similarity.lshNearDupPairs(
         Tables(spark, dir, "embeddings"), col("vec_id"),
         col("embedding"), dim = 64, numPlanes = 8,
@@ -1671,7 +1669,7 @@ object ExtQueries {
       : Map[String, DataFrame] = {
     // resolved BEFORE the build — SharedFrames tiers must never nest
     val toked0 = docToksFrames(spark, dir)("toks")
-    sharedFrames(spark, dir, "winnow_family") {
+    SharedFrames(spark, dir, "winnow_family") {
       val toked = graft.Tables.materialize(toked0)
       Seq(
         "wp3" -> Dedup.winnowPairsFromToks(toked,
@@ -1688,7 +1686,7 @@ object ExtQueries {
     * exact join on first touch. */
   private def jaccardTruth5(spark: SparkSession, dir: String): DataFrame = {
     val toked0 = docToksFrames(spark, dir)("toks")
-    sharedFrames(spark, dir, "jaccard_truth5") {
+    SharedFrames(spark, dir, "jaccard_truth5") {
       Seq("pairs" -> Dedup.ngramJaccardPairsFromToks(toked0,
         n = 5, threshold = 0.5).select(col("id1"), col("id2")))
     }("pairs")
@@ -1880,7 +1878,7 @@ object ExtQueries {
     * gram pass per run. Same shape at 100 TB: the span frame is a
     * build artifact every policy readout shares. */
   private def spanFrames(spark: SparkSession, dir: String): DataFrame =
-    sharedFrames(spark, dir, "substring_spans") {
+    SharedFrames(spark, dir, "substring_spans") {
       Seq("spans" -> Dedup.repeatedSpans(Tables(spark, dir, "documents"),
         col("doc_id"), col("text"), gramChars = 40, minFreq = 2))
     }("spans")
@@ -2087,7 +2085,7 @@ object ExtQueries {
     // resolve the serving-store tier BEFORE entering this tier's
     // build block (the no-nested-computeIfAbsent house rule)
     val graphLeg = hybridGraphLeg(spark, dir)
-    sharedFrames(spark, dir, "hybrid_rrf") {
+    SharedFrames(spark, dir, "hybrid_rrf") {
       Seq("brute" -> hybridRrf(spark, dir, hybridBruteLeg(spark, dir)),
         "served" -> hybridRrf(spark, dir, hybridServedLeg(spark, dir)),
         "graph" -> hybridRrf(spark, dir, graphLeg))
@@ -2282,7 +2280,7 @@ object ExtQueries {
       : Map[String, DataFrame] = {
     // resolve the hybrid tier BEFORE entering this build block
     val hybrid = hybridFrames(spark, dir)("graph")
-    sharedFrames(spark, dir, "serve_e2e") {
+    SharedFrames(spark, dir, "serve_e2e") {
       val docs = Tables(spark, dir, "documents")
       val cand = hybrid.select(col("query_id"), col("doc_id"))
       val (reranked, fin) = serveRerankMmr(docs, cand)
@@ -2920,7 +2918,7 @@ object ExtQueries {
     * persisted frames. */
   private def ivfDeleteFrames(spark: SparkSession, dir: String)
       : Map[String, DataFrame] =
-    sharedFrames(spark, dir, "ivf_delete") {
+    SharedFrames(spark, dir, "ivf_delete") {
       val emb = Tables(spark, dir, "embeddings")
       val (cent, assign) = Similarity.buildIvfIndex(emb, col("vec_id"),
         col("embedding"), numCells = 16, iters = 3, sampleMod = 4)
@@ -3354,7 +3352,7 @@ object ExtQueries {
     * rerank paths — reads the same 8-byte-per-vector parquet back.
     * Exactly the resident-index shape a 100 TB deployment persists. */
   private def bitqWords(spark: SparkSession, dir: String): DataFrame =
-    sharedFrames(spark, dir, "bitq_words") {
+    SharedFrames(spark, dir, "bitq_words") {
       val emb = Tables(spark, dir, "embeddings")
       val th = Similarity.binaryDimThresholds(emb, col("embedding"), 64)
       Seq("words" -> Similarity.binarySignWords(emb, col("vec_id"),

@@ -35,7 +35,7 @@ object PipelineQueries {
     val uris = Seq(s"$dir/events.parquet", s"$dir/lineitem.parquet",
       s"$dir/unmatched.parquet")
     val routed = BatchPipeline.routeFiles(uris, Seq(cfg, decoy))
-    val (json, _) = BatchPipeline.transform(spark, routed)
+    val json = BatchPipeline.transformObserved(spark, routed)._1
     json
       .select(get_json_object(col("event_json"), "$.event").as("event"))
       .groupBy("event").agg(count(lit(1)).as("n"))
