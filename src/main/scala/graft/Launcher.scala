@@ -42,11 +42,11 @@ import graft.sink.{EventPoster, PostResult}
   *                                      poster — this container has no
   *                                      egress)
   *   --max_files_per_trigger N         (streaming: cap files ingested
-  *                                      per micro-batch so a backfill
-  *                                      burst is paced across batches
-  *                                      instead of landing in one; the
-  *                                      reference's Pub/Sub+windowing
-  *                                      paces this naturally)
+  *                                      per micro-batch, per config, so
+  *                                      a backfill burst is paced across
+  *                                      batches instead of landing in
+  *                                      one; the reference's Pub/Sub+
+  *                                      windowing paces this naturally)
   *
   * Launch aborts with a CRITICAL log and exit code 1 when the config
   * URI is invalid, missing, or unparseable (`M/main.py:430-437`,
@@ -191,22 +191,23 @@ object Launcher {
   }
 
   /** Streaming-mode launch: one routed stream per PARQUET config over
-    * the shared watch dir, each filtered to the files whose FIRST
-    * matching config (across the full list, parquet or not) is this
-    * one — so a multi-config deployment maps every file exactly once,
-    * by the config the reference's router would pick
-    * (`M/main.py:466-495`). Each stream checkpoints under its own
-    * per-config directory, and DLQ frames append under a PER-CONFIG
-    * subdirectory of the configured dir: N streams' micro-batch jobs
-    * committing into one directory race on the shared `_temporary`
-    * committer dir (observed: FileNotFoundException mid-commit). Read
-    * a DLQ dir with `recursiveFileLookup` to see all configs' rows.
+    * the shared watch dir, each reading only its config's prefix and
+    * keeping the files whose FIRST matching config (across the full
+    * list, parquet or not) is this one — so a multi-config deployment
+    * reads and maps every file once, by the config the reference's
+    * router would pick (`M/main.py:466-495`). Each stream checkpoints
+    * under its own per-config directory, and DLQ frames append under a
+    * PER-CONFIG subdirectory of the configured dir: N streams'
+    * micro-batch jobs committing into one directory race on the shared
+    * `_temporary` committer dir (observed: FileNotFoundException
+    * mid-commit). Read a DLQ dir with `recursiveFileLookup` to see all
+    * configs' rows.
     * Returns the started queries; [[main]] awaits them. `poster`
     * overrides the transport (specs inject a counting poster).
     * `schema` skips input-schema inference when the caller already
     * knows it — inference batch-reads the watch dir, which at 10^6
     * files is a full extra directory listing before the N stream
-    * sources each build their own; a production launch should pass
+    * sources each list their prefix; a production launch should pass
     * the declared schema. */
   def startStreams(spark: SparkSession, a: Args, configs: Seq[SourceConfig],
       opts: graft.compile.ConfigCompiler.Options,

@@ -226,18 +226,33 @@ object BatchPipeline {
   private def globEscape(s: String): String =
     s.flatMap(c => if ("*?[]{}\\".contains(c)) s"\\$c" else c.toString)
 
+  /** What a file source reads to see every object under the flat
+    * (GCS-style) `prefix`, split at its last '/' into a directory part
+    * and a file-name part. Prefix `d/a_` matches object `d/a_x.parquet`
+    * AND `d/a_2024/part.parquet`: the leaf glob `d/a_*` (glob
+    * metacharacters in the file-name part escaped) matches both the flat
+    * files and any prefix-named subdirectory, whose files the file index
+    * lists, and never an unrelated sibling or subdirectory (as a
+    * recursive scan + leaf-name-only `pathGlobFilter` would). A directory
+    * prefix (`d/`) reads its directory. None when the prefix has no '/'
+    * (its directory would be the empty string). */
+  private[graft] def prefixPath(prefix: String): Option[String] = {
+    val slash = prefix.lastIndexOf('/')
+    Option.when(slash >= 0) {
+      val (dir, base) = prefix.splitAt(slash + 1)
+      if (base.isEmpty) dir else dir + globEscape(base) + "*"
+    }
+  }
+
   /** Transform stage with NO driver-side file list at all — the shape
     * for lakes past [[routeUriFrame]]'s collect (10⁷-10⁸ objects,
     * where even the routed path list is a driver-memory hazard). Each
     * parquet config scans its own prefix directly:
     *
-    *  - scan root = the config prefix's directory part; a partial
-    *    file-name prefix becomes a recursive leaf-glob scan matching
-    *    GCS FLAT prefix semantics (both `d/a_x.parquet` and files
-    *    under a prefix-named subdirectory `d/a_2024/`), a directory
-    *    prefix scans recursively. Listing is Spark's own distributed
-    *    FileIndex — file paths live in executor-side listing
-    *    partitions, never in a driver Seq.
+    *  - scan root = the config prefix's [[prefixPath]] (GCS FLAT
+    *    prefix semantics), listed recursively. Listing is Spark's own
+    *    distributed FileIndex — file paths live in executor-side
+    *    listing partitions, never in a driver Seq.
     *  - first-match-wins across OVERLAPPING prefixes is enforced by the
     *    router when-chain over `input_file_name()` — a file under two
     *    configs' prefixes is transformed only by its first match, same
@@ -253,28 +268,15 @@ object BatchPipeline {
       opts: ConfigCompiler.Options = ConfigCompiler.Options())
       : (DataFrame, DataFrame, Map[String, Observation]) = {
     val parts = configs.filter(_.isParquet).sortBy(_.configId).map { cfg =>
-      val p = cfg.sourcePrefix
-      val slash = p.lastIndexOf('/')
-      // a prefix with no '/' would make `dir` the empty string and fail
-      // deep inside the scan with an unrelatable Hadoop path error —
+      // a prefix with no '/' would make the scan root the empty string and
+      // fail deep inside the scan with an unrelatable Hadoop path error —
       // reject it here with the config's name attached
-      require(slash >= 0, s"config ${cfg.configId}: source prefix '$p' " +
-        "has no '/' — prefix-scan mode needs a directory component")
-      val (dir, base) = (p.substring(0, slash + 1), p.substring(slash + 1))
-      val reader = spark.read.option("ignoreCorruptFiles", "true")
-        .option("recursiveFileLookup", "true")
-      val scanned =
-        // GCS prefix semantics are FLAT: prefix `d/a_` matches object
-        // `d/a_x.parquet` AND `d/a_2024/part.parquet`. A leaf glob
-        // (`d/a_*`, glob metachars in the base escaped) matches both
-        // the flat files and any prefix-named subdirectory, which
-        // recursiveFileLookup then descends — full prefix semantics
-        // with no driver-side listing, and still no reading of
-        // unrelated subdirectories the way a recursive scan +
-        // `pathGlobFilter` (leaf-name-only) would. A directory prefix
-        // scans its whole tree.
-        (if (base.nonEmpty) reader.parquet(dir + globEscape(base) + "*")
-         else reader.parquet(dir))
+      val path = prefixPath(cfg.sourcePrefix).getOrElse(throw
+        new IllegalArgumentException(s"config ${cfg.configId}: source " +
+          s"prefix '${cfg.sourcePrefix}' has no '/' — prefix-scan mode " +
+          "needs a directory component"))
+      val scanned = spark.read.option("ignoreCorruptFiles", "true")
+        .option("recursiveFileLookup", "true").parquet(path)
       val routedRows = scanned.filter(
         Router.firstMatchExpr(
           Router.normalizeFileUri(input_file_name()), configs)

@@ -47,11 +47,11 @@ object StreamingPipeline {
     * (`M/main.py:461-462,506`); a file-stream source without a cap
     * instead lands an entire backfill-sized burst in ONE micro-batch —
     * one giant state commit, one giant post. `None` = unpaced. */
-  private def paced(spark: SparkSession, schema: StructType, dir: String,
+  private def paced(spark: SparkSession, schema: StructType, path: String,
       maxFilesPerTrigger: Option[Int]): DataFrame = {
     val r = spark.readStream.schema(schema)
     maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n.toLong))
-    r.parquet(dir)
+    r.parquet(path)
   }
 
   /** One config's streaming transform: file-source scan under the
@@ -73,17 +73,46 @@ object StreamingPipeline {
     * configs watching one directory map every file exactly once, by
     * exactly its first matching config. The route predicate is the
     * same zero-shuffle when-chain the batch router compiles, applied
-    * to `input_file_name()`; Spark prunes non-matching files at the
-    * source filter, it never transforms them. */
+    * to `input_file_name()`.
+    *
+    * A file can route to `cfg` only if its path starts with
+    * `cfg.sourcePrefix`, so the file source lists and reads only that
+    * prefix ([[routedSourcePath]]): N queries over one directory read
+    * each file once between them, not N times, and `maxFilesPerTrigger`
+    * paces the config's own files. The row filter still decides
+    * between overlapping prefixes. */
   def transformStreamRouted(spark: SparkSession, cfg: SourceConfig,
       allConfigs: Seq[SourceConfig], dir: String, schema: StructType,
       opts: ConfigCompiler.Options = ConfigCompiler.Options(),
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val input = paced(spark, schema, dir, maxFilesPerTrigger)
+    val input = paced(spark, schema, routedSourcePath(spark, dir,
+      cfg.sourcePrefix), maxFilesPerTrigger)
       .filter(graft.operators.Router.firstMatchExpr(
         graft.operators.Router.normalizeFileUri(input_file_name()),
         allConfigs) === cfg.configId)
     ConfigCompiler.compile(cfg, input, opts).df
+  }
+
+  /** The path a routed stream over the watch `dir` reads for a config
+    * with `prefix`: the prefix's [[BatchPipeline.prefixPath]] leaf glob
+    * (`dir/a_` -> `dir/a_*`). The whole `dir` instead when
+    *  - the prefix does not lie under `dir` as a string (a `file://`
+    *    dir with plain-path prefixes, another directory): its glob
+    *    could read outside `dir`;
+    *  - the prefix has no file-name part: a directory source must exist
+    *    when the query starts, a glob need not;
+    *  - `dir` holds a `_spark_metadata` sink log (or the check fails):
+    *    Spark reads such a directory through the log, which hides files
+    *    of uncommitted batches, and a glob path would bypass it. */
+  private[graft] def routedSourcePath(spark: SparkSession, dir: String,
+      prefix: String): String = {
+    def sinkLog = scala.util.Try {
+      val log = new org.apache.hadoop.fs.Path(dir, "_spark_metadata")
+      log.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(log)
+    }.getOrElse(true)
+    if (prefix.startsWith(dir.stripSuffix("/") + "/") && !prefix.endsWith("/") &&
+        !sinkLog) BatchPipeline.prefixPath(prefix).getOrElse(dir)
+    else dir
   }
 
   /** Wire a compiled stream (`event`, `properties`, `error`,

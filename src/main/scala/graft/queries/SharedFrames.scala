@@ -45,6 +45,13 @@ private[graft] object SharedFrames {
     out.toSeq
   }
 
+  /** (tier name, scratch dir) of every tier built in this JVM. */
+  def scratchDirs: Seq[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    built.asScala.toSeq.map { case (key, (path, _)) =>
+      key.substring(key.lastIndexOf('|') + 1) -> path }
+  }
+
   /** First caller per (applicationId, sfDir, name) runs `build` (a
     * seq of frame name → definition), persists every frame to one
     * scratch dir, and returns the read-back handles; later callers

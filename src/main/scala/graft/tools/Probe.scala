@@ -122,7 +122,9 @@ object Probe {
 
   /** Task CPU, task run time and task count per stage. A stage is
     * named by its first graft.* callsite frames: the stage name itself
-    * is the async-execution anonfun. */
+    * is the async-execution anonfun. A stage AQE submits from its own
+    * threads has no such frame and is named by its RDDs' operator
+    * scopes (`Exchange <- WholeStageCodegen (1) <- Scan parquet`). */
   private final class StageListener extends SparkListener {
     private val names = new ConcurrentHashMap[Int, String]()
     // stage -> (executor CPU ns, executor run ms, tasks)
@@ -133,8 +135,11 @@ object Probe {
         .filter(l => l.contains("graft.") && !l.contains("graft.tools."))
         .take(3).map(_.trim.stripPrefix("at ").takeWhile(_ != ')') + ")")
         .mkString(" <- ")
+      val scopes = e.stageInfo.rddInfos.sortBy(-_.id)
+        .flatMap(_.scope.map(_.name)).distinct.mkString(" <- ")
       names.put(e.stageInfo.stageId,
         if (g.nonEmpty) g.take(220)
+        else if (scopes.nonEmpty) scopes.take(220)
         else e.stageInfo.name.takeWhile(_ != '\n').take(140))
     }
 
@@ -174,14 +179,15 @@ object Probe {
 
   /** Writes each query's formatted explain to
     * `<outDir>/<query>_<suffix>.txt` ("ERROR: …" when planning throws);
-    * returns the files. */
+    * returns the files. The dump is [[stable]], so a diff of two dumps
+    * shows only plan changes. */
   def plans(spark: SparkSession, sfDir: String, outDir: String,
       suffix: String, queries: Seq[String]): Seq[java.io.File] = {
     new java.io.File(outDir).mkdirs()
     queries.map { name =>
       val txt =
-        try SparkEntry.queries(name)(spark, sfDir)
-          .queryExecution.explainString(FormattedMode)
+        try stable(SparkEntry.queries(name)(spark, sfDir)
+          .queryExecution.explainString(FormattedMode))
         catch { case e: Exception => s"ERROR: $e" }
       val f = new java.io.File(outDir, s"${name}_$suffix.txt")
       val w = new java.io.PrintWriter(f)
@@ -189,6 +195,17 @@ object Probe {
       f
     }
   }
+
+  /** `plan` without the tokens that change from run to run: `#N`
+    * expression ids and `plan_id=N` lose their numbers, and each shared
+    * tier's scratch dir (`graft_shared_<tier><random>`) ends in `<tmp>`. */
+  private def stable(plan: String): String =
+    SharedFrames.scratchDirs.foldLeft(
+      plan.replaceAll("#\\d+", "#").replaceAll("plan_id=\\d+", "plan_id=")) {
+      case (txt, (tier, dir)) =>
+        val name = s"graft_shared_$tier"
+        txt.replace(dir, dir.take(dir.lastIndexOf(name) + name.length) + "<tmp>")
+    }
 
   /** The ten heaviest gates of the round-16 bench (the `scale`
     * default), each with the table whose rows drive its cost. A query

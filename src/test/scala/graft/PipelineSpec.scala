@@ -174,6 +174,156 @@ class PipelineSpec extends SparkSpec {
     assert(bEvents == Seq("from_b")) // not from_a: cfgA matched it first
   }
 
+  private def routedCfg(id: String, prefix: String) = SourceConfig(
+    configId = id, sourcePrefix = prefix,
+    eventNameField = Some("event_type"),
+    fieldMappings = Seq(
+      FieldMapping("ts_epoch", "time", CastType.UnixTimestampAuto),
+      FieldMapping("uid", "$user_id", CastType.StringT)))
+
+  private val eventSchema = new org.apache.spark.sql.types.StructType()
+    .add("event_type", "string").add("ts_epoch", "long").add("uid", "string")
+
+  /** Runs the routed stream of each of `run` (routed against `cfgs`) over
+    * `dir` to the end of its input, posting to [[EventCountingPoster]];
+    * returns each query's `numInputRows` per micro-batch. */
+  private def runRouted(dir: String, cfgs: Seq[SourceConfig],
+      ckpt: java.nio.file.Path, run: Seq[SourceConfig] = Nil,
+      maxFilesPerTrigger: Option[Int] = None): Map[String, Seq[Long]] =
+    (if (run.isEmpty) cfgs else run).map { c =>
+      val q = StreamingPipeline.sinkStream(
+        StreamingPipeline.transformStreamRouted(spark, c, cfgs, dir,
+          eventSchema, maxFilesPerTrigger = maxFilesPerTrigger),
+        () => new EventCountingPoster, _ => (), _ => (),
+        triggerInterval = "100 milliseconds")
+        .option("checkpointLocation", s"$ckpt/${c.configId}").start()
+      try q.processAllAvailable() finally q.stop()
+      c.configId -> q.recentProgress.map(_.numInputRows).toSeq
+    }.toMap
+
+  /** Σ `numInputRows` per query of a [[runRouted]] result. */
+  private def rowsRead(batches: Map[String, Seq[Long]]): Map[String, Long] =
+    batches.map { case (id, rows) => id -> rows.sum }
+
+  test("routed streams over one directory read each landed row once") {
+    val watch = Files.createTempDirectory("graft_routed_once")
+    writeFlatParquet(watch.resolve("a_1.parquet"), Seq(("a1", 10L, "u1"), ("a1b", 11L, "u2")))
+    writeFlatParquet(watch.resolve("a_2.parquet"), Seq(("a2", 12L, "u3")))
+    writeFlatParquet(watch.resolve("b_1.parquet"), Seq(("b1", 20L, "u4")))
+    writeFlatParquet(watch.resolve("c_1.parquet"), Seq(("c1", 30L, "u5"), ("c1b", 31L, "u6")))
+    val cfgs = Seq("a", "b", "c").map(id => routedCfg(id, s"$watch/${id}_"))
+    PostedEvents.n.set(0)
+    val read = rowsRead(runRouted(watch.toString, cfgs,
+      Files.createTempDirectory("graft_routed_once_ckpt")))
+    // a whole-directory source per query would read all 6 rows 3 times
+    assert(read == Map("a" -> 3L, "b" -> 1L, "c" -> 2L))
+    assert(PostedEvents.n.get == 6L)
+  }
+
+  test("routed stream: a prefix-named subdirectory is delivered, an " +
+      "unrelated one is not read") {
+    val watch = Files.createTempDirectory("graft_routed_sub")
+    writeFlatParquet(watch.resolve("a_1.parquet"), Seq(("flat", 10L, "u1")))
+    Files.createDirectory(watch.resolve("a_2024"))
+    writeFlatParquet(watch.resolve("a_2024").resolve("part.parquet"),
+      Seq(("nested", 20L, "u2")))
+    Files.createDirectory(watch.resolve("other"))
+    writeFlatParquet(watch.resolve("other").resolve("x.parquet"),
+      Seq(("unrelated", 30L, "u3"), ("unrelated2", 31L, "u4")))
+    PostedEvents.n.set(0)
+    val read = rowsRead(runRouted(watch.toString,
+      Seq(routedCfg("a", s"$watch/a_")),
+      Files.createTempDirectory("graft_routed_sub_ckpt")))
+    assert(PostedEvents.n.get == 2L) // flat + nested
+    assert(read == Map("a" -> 2L))   // other/ never read
+  }
+
+  test("routed stream: glob metacharacters in a prefix match literally") {
+    val watch = Files.createTempDirectory("graft_routed_glob")
+    writeFlatParquet(watch.resolve("a[1]_x.parquet"), Seq(("lit", 10L, "u1")))
+    // what the unescaped pattern a[1]_* would match instead
+    writeFlatParquet(watch.resolve("a1_x.parquet"),
+      Seq(("sib", 20L, "u2"), ("sib2", 21L, "u3")))
+    PostedEvents.n.set(0)
+    val read = rowsRead(runRouted(watch.toString,
+      Seq(routedCfg("a", s"$watch/a[1]_")),
+      Files.createTempDirectory("graft_routed_glob_ckpt")))
+    assert(PostedEvents.n.get == 1L)
+    assert(read == Map("a" -> 1L))
+  }
+
+  test("routed stream: a whole-directory checkpoint restarts on the " +
+      "narrowed source without re-posting and picks up new files") {
+    val watch = Files.createTempDirectory("graft_routed_restart")
+    val ckpt = Files.createTempDirectory("graft_routed_restart_ckpt")
+    writeFlatParquet(watch.resolve("a_1.parquet"), Seq(("a1", 10L, "u1"), ("a1b", 11L, "u2")))
+    writeFlatParquet(watch.resolve("b_1.parquet"), Seq(("b1", 20L, "u3")))
+    val cfgs = Seq(routedCfg("a", s"$watch/a_"), routedCfg("b", s"$watch/b_"))
+    PostedEvents.n.set(0)
+    // the `file://` form of the watch dir falls back to the whole dir
+    val whole = rowsRead(runRouted(s"file://$watch", cfgs, ckpt, run = cfgs.take(1)))
+    assert(whole == Map("a" -> 3L) && PostedEvents.n.get == 2L)
+    val again = rowsRead(runRouted(watch.toString, cfgs, ckpt, run = cfgs.take(1)))
+    assert(again == Map("a" -> 0L) && PostedEvents.n.get == 2L)
+    writeFlatParquet(watch.resolve("a_2.parquet"), Seq(("a2", 12L, "u4")))
+    val late = rowsRead(runRouted(watch.toString, cfgs, ckpt, run = cfgs.take(1)))
+    assert(late == Map("a" -> 1L) && PostedEvents.n.get == 3L)
+  }
+
+  test("routed streams: a file:// watch dir delivers every file through " +
+      "the whole-dir fallback") {
+    val watch = Files.createTempDirectory("graft_routed_uri")
+    writeFlatParquet(watch.resolve("a_1.parquet"), Seq(("a1", 10L, "u1"), ("a1b", 11L, "u2")))
+    writeFlatParquet(watch.resolve("b_1.parquet"), Seq(("b1", 20L, "u3")))
+    val cfgs = Seq(routedCfg("a", s"$watch/a_"), routedCfg("b", s"$watch/b_"))
+    PostedEvents.n.set(0)
+    val read = rowsRead(runRouted(s"file://$watch", cfgs,
+      Files.createTempDirectory("graft_routed_uri_ckpt")))
+    assert(PostedEvents.n.get == 3L)
+    // plain-path prefixes are not under the file:// dir as strings, so
+    // each stream reads the whole dir (the row filter still routes)
+    assert(read == Map("a" -> 3L, "b" -> 3L))
+  }
+
+  test("routed streams: maxFilesPerTrigger paces each config's own files") {
+    val watch = Files.createTempDirectory("graft_routed_paced")
+    for (id <- Seq("a", "b"); i <- 1 to 2)
+      writeFlatParquet(watch.resolve(s"${id}_$i.parquet"), Seq((s"$id$i", 10L + i, s"u$i")))
+    val cfgs = Seq(routedCfg("a", s"$watch/a_"), routedCfg("b", s"$watch/b_"))
+    PostedEvents.n.set(0)
+    val batches = runRouted(watch.toString, cfgs,
+      Files.createTempDirectory("graft_routed_paced_ckpt"),
+      maxFilesPerTrigger = Some(1))
+    assert(PostedEvents.n.get == 4L)
+    // one micro-batch per own file: the other config's files in the
+    // directory no longer take turns under the cap
+    assert(batches.map { case (id, rows) => id -> rows.count(_ > 0) } ==
+      Map("a" -> 2, "b" -> 2))
+  }
+
+  test("routed source path: the prefix's leaf glob, the whole dir in " +
+      "each fallback") {
+    val watch = Files.createTempDirectory("graft_routed_path").toString
+    def path(dir: String, prefix: String) =
+      StreamingPipeline.routedSourcePath(spark, dir, prefix)
+    assert(BatchPipeline.prefixPath("d/a[1]_") == Some("d/a\\[1\\]_*"))
+    assert(BatchPipeline.prefixPath("d/sub/") == Some("d/sub/"))
+    assert(BatchPipeline.prefixPath("no-slash").isEmpty)
+    assert(path(watch, s"$watch/a_") == s"$watch/a_*")
+    assert(path(s"$watch/", s"$watch/a_") == s"$watch/a_*")
+    assert(path(watch, s"$watch/sub/a{b}_") == s"$watch/sub/a\\{b\\}_*")
+    // 1. the prefix is not under the dir as a string
+    assert(path(s"file://$watch", s"$watch/a_") == s"file://$watch")
+    assert(path(watch, s"${watch}x/a_") == watch)
+    assert(path(watch, "a_") == watch)
+    // 2. a directory prefix
+    assert(path(watch, s"$watch/") == watch)
+    assert(path(watch, s"$watch/sub/") == watch)
+    // 3. a file-sink output directory, read through its log
+    Files.createDirectory(java.nio.file.Paths.get(watch, "_spark_metadata"))
+    assert(path(watch, s"$watch/a_") == watch)
+  }
+
   test("streaming posting is exactly-once regardless of the api-dlq " +
       "writer's action count") {
     // no-op api-dlq writer (the Launcher shape when --dlq_topic_api_errors

@@ -31,6 +31,27 @@ class ProbeSpec extends SparkSpec {
     }
   }
 
+  test("stages names AQE-submitted stages by their operator scopes") {
+    val rounds = Probe.stages(spark, sf0001, "q1_agg",
+      drain = () => org.apache.spark.ListenerBusDrain(spark.sparkContext))
+    val names = rounds.flatMap(_.stages.map(_.callsite))
+    assert(names.exists(_.contains("Exchange")), names)
+    assert(!names.exists(_.contains("withThreadLocalCaptured")), names)
+  }
+
+  test("plans dumps are byte-identical across runs of the same plan") {
+    val out = Files.createTempDirectory("graft_probe_stable").toFile
+    val Seq(a, b) = Seq("one", "two").flatMap(suffix =>
+      Probe.plans(spark, sf0001, out.getPath, suffix, Seq("doc_dedup_pipeline")))
+    val (ta, tb) = (new String(Files.readAllBytes(a.toPath)),
+      new String(Files.readAllBytes(b.toPath)))
+    assert(ta.contains("== Physical Plan =="), ta)
+    assert(ta == tb)
+    assert("#\\d|plan_id=\\d".r.findFirstIn(ta).isEmpty, ta)
+    // the shared tier it reads, with the fixed token for the random suffix
+    assert(ta.contains("graft_shared_dedup_core<tmp>/"), ta)
+  }
+
   test("growth: '=' for the same input, NaN for a non-positive measure") {
     assert(Probe.growth(3, 7, 500, 500) == "=")
     assert(Probe.growth(0, 7, 500, 5000) == "NaN")
