@@ -208,11 +208,13 @@ object Launcher {
     * knows it — inference batch-reads the watch dir, which at 10^6
     * files is a full extra directory listing before the N stream
     * sources each list their prefix; a production launch should pass
-    * the declared schema. */
+    * the declared schema. `triggerInterval` is each stream's
+    * micro-batch trigger ([[StreamingPipeline.sinkStream]]'s). */
   def startStreams(spark: SparkSession, a: Args, configs: Seq[SourceConfig],
       opts: graft.compile.ConfigCompiler.Options,
       poster: Option[() => EventPoster] = None,
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
+      schema: Option[org.apache.spark.sql.types.StructType] = None,
+      triggerInterval: String = "10 seconds")
       : Seq[org.apache.spark.sql.streaming.StreamingQuery] = {
     val dir = a.inputSubscription.getOrElse(
       sys.error("--input_subscription is required in streaming mode"))
@@ -226,7 +228,8 @@ object Launcher {
         dlq => a.dlqTopicTransformErrors.foreach(d =>
           dlq.write.mode("append").json(s"$d/${cfg.configId}")),
         api => a.dlqTopicApiErrors.foreach(d =>
-          api.write.mode("append").json(s"$d/${cfg.configId}")))
+          api.write.mode("append").json(s"$d/${cfg.configId}")),
+        triggerInterval)
         .option("checkpointLocation",
           s"${dir}_graft_ckpt_${cfg.configId}")
         .start()

@@ -9,19 +9,31 @@ object Tables {
 
   /** Sessions must set `spark.sql.legacy.parquet.nanosAsLong=true`
     * (Spark's vectorized reader has no TIMESTAMP(NANOS) type — the
-    * `events.ts` column is one). [[Sessions.tune]] applies it. */
+    * `events.ts` column is one). [[Sessions.tune]] applies it. The read
+    * is schema-carrying ([[readParquet]]). */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    normalize(spark.read.parquet(s"$sfDir/$name.parquet"))
+    normalize(readParquet(spark, s"$sfDir/$name.parquet"))
+
+  /** `spark.read.parquet(path)` without its schema-inference job: the
+    * file's footer gives the schema inference would
+    * ([[graft.pipeline.BatchPipeline.footerScanSchema]]); a directory
+    * infers. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    graft.pipeline.BatchPipeline.footerScanSchema(spark, Seq(path))
+      .fold(spark.read)(spark.read.schema).parquet(path)
 
   /** Cache + eagerly materialize a (small) intermediate frame. Lazy
     * caches that feed multiple branches of ONE job cause a computation
     * storm: every branch races to fill the cache and tasks serialize on
     * the block locks (measured 8x slowdowns on the LSH pair queries).
     * An eager count fills the cache once, up front. */
-  def materialize(df: DataFrame): DataFrame = {
+  def materialize(df: DataFrame): DataFrame = materializeCounted(df)._1
+
+  /** [[materialize]], returning the eager count's value with the frame
+    * (a second `count()` on the cached frame is one more job). */
+  def materializeCounted(df: DataFrame): (DataFrame, Long) = {
     val c = df.cache()
-    c.count()
-    c
+    (c, c.count())
   }
 
   private val scratchDirs =

@@ -194,6 +194,20 @@ object BatchPipeline {
       : Option[StructType] =
     Try(paths.map(footer(spark, _))).toOption.flatMap(scanSchema)
 
+  /** [[footerScanSchema]] of directory `dir`'s children, less the names
+    * every scan's file index drops (`_SUCCESS`, `.`-prefixed checksum
+    * files): the schema a scan of `dir` infers. None (the scan infers)
+    * when any other child would change that — a summary file, a
+    * subdirectory, a hidden or unreadable file. */
+  private[graft] def dirScanSchema(spark: SparkSession, dir: String)
+      : Option[StructType] = {
+    val p = new Path(dir)
+    Try(p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p))
+      .toOption.flatMap(children => footerScanSchema(spark, children.toSeq
+        .map(_.getPath).filterNot(c => c.getName == "_SUCCESS" ||
+          c.getName.startsWith(".")).map(_.toString)))
+  }
+
   /** The footer check of each config's paths: the readable ones, the
     * corrupt count, and the scan schema the readable footers give. */
   private final case class Checked(readable: Seq[String], corrupt: Long,

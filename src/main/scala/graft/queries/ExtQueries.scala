@@ -1767,8 +1767,8 @@ object ExtQueries {
     * gated operators verbatim; the audit is one union + one join
     * against the bounded truth set. */
   def dedupFamilyCompare(spark: SparkSession, dir: String): DataFrame = {
-    val exact = graft.Tables.materialize(jaccardTruth3(spark, dir))
-    val nExact = exact.count()
+    val (exact, nExact) =
+      graft.Tables.materializeCounted(jaccardTruth3(spark, dir))
     val fams = Seq(
       "minhash_lsh" -> minhash3Frames(spark, dir)("pairs"),
       "simhash" -> Dedup.simhashNearDupPairsFromSketch(
@@ -1803,11 +1803,10 @@ object ExtQueries {
     * band). Both operands are the already-gated frames; the audit
     * adds two counts and one join on the bounded pair sets. */
   def lshPairPr(spark: SparkSession, dir: String): DataFrame = {
-    val exact = graft.Tables.materialize(jaccardTruth3(spark, dir))
-    val cand = graft.Tables.materialize(
+    val (exact, nExact) =
+      graft.Tables.materializeCounted(jaccardTruth3(spark, dir))
+    val (cand, nCand) = graft.Tables.materializeCounted(
       dedupMinhashLsh(spark, dir).select(col("id1"), col("id2")))
-    val nExact = exact.count()
-    val nCand = cand.count()
     val nBoth = exact.join(cand, Seq("id1", "id2")).count()
     val spark2 = spark
     import spark2.implicits._

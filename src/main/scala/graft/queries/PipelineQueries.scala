@@ -74,7 +74,7 @@ object PipelineQueries {
     * is [[graft.pipeline.StreamingPipeline.sinkStream]] (append mode,
     * foreachBatch, bounded state). Same applies to [[streamSessionize]]. */
   def streamWindowCounts(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.readParquet(spark, s"$dir/events.parquet").schema
     val name = "stream_window_counts_sink"
     onStreamSession(spark, 8) { s =>
       // file-stream source needs a directory or a glob — a literal file
@@ -101,7 +101,7 @@ object PipelineQueries {
   /** Structured Streaming session windows: 10-minute-gap sessions per
     * user via the native session_window operator, run to completion. */
   def streamSessionize(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.readParquet(spark, s"$dir/events.parquet").schema
     val name = "stream_sessionize_sink"
     onStreamSession(spark, 8) { s =>
       val stream = s.readStream.schema(schema)
@@ -141,7 +141,7 @@ object PipelineQueries {
     * single-batch delivery. Same gate-only memory-sink caveat as
     * [[streamWindowCounts]]. */
   def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.readParquet(spark, s"$dir/events.parquet").schema
     val name = "stream_stream_join_sink"
     onStreamSession(spark, 8) { s =>
       def src = Tables.normalize(
@@ -184,7 +184,7 @@ object PipelineQueries {
     * the same bound the built-in streaming aggregation carries. */
   def streamStatefulAgg(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.readParquet(spark, s"$dir/events.parquet").schema
     val name = "stream_stateful_agg_sink"
     onStreamSession(spark, 8) { s =>
       import s.implicits._
@@ -231,7 +231,7 @@ object PipelineQueries {
   def streamTransformWithState(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
       TTLConfig, TimeMode, TimerValues, ValueState}
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.readParquet(spark, s"$dir/events.parquet").schema
     val name = "stream_tws_sink"
     onStreamSession(spark, 8) { s =>
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
@@ -304,7 +304,7 @@ object PipelineQueries {
     * aggregate of `events`. Same gate-only memory-sink caveat as
     * [[streamWindowCounts]]. */
   def streamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.readParquet(spark, s"$dir/events.parquet").schema
     val name = "stream_dedup_sink"
     onStreamSession(spark, 8) { s =>
       def src = Tables.normalize(
@@ -337,7 +337,7 @@ object PipelineQueries {
     * mergeable with any other site's sketch by cell-wise addition.
     * Same gate-only memory-sink caveat as [[streamWindowCounts]]. */
   def streamCms(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.readParquet(spark, s"$dir/events.parquet").schema
     val name = "stream_cms_sink"
     onStreamSession(spark, 8) { s =>
       def src = Tables.normalize(
@@ -366,7 +366,7 @@ object PipelineQueries {
     * the stream. Gate reduces to per-segment counts (order-
     * independent). Same memory-sink caveat as [[streamWindowCounts]]. */
   def streamStaticJoin(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.readParquet(spark, s"$dir/events.parquet").schema
     val name = "stream_static_join_sink"
     onStreamSession(spark, 8) { s =>
       val dim = Tables(s, dir, "customer")
@@ -398,7 +398,7 @@ object PipelineQueries {
     * replaying source while a CMS counter needs exactly-once.
     * Same gate-only memory-sink caveat as [[streamWindowCounts]]. */
   def streamHll(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.readParquet(spark, s"$dir/events.parquet").schema
     val name = "stream_hll_sink"
     onStreamSession(spark, 8) { s =>
       def src = Tables.normalize(
@@ -426,7 +426,7 @@ object PipelineQueries {
     * here through the aggregate-function surface instead of the
     * relational register frame). */
   def streamHllAgg(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.readParquet(spark, s"$dir/events.parquet").schema
     val name = "stream_hll_agg_sink"
     onStreamSession(spark, 8) { s =>
       def src = Tables.normalize(
@@ -456,7 +456,7 @@ object PipelineQueries {
     * dropDuplicates is gate-only; production bounds it with
     * dropDuplicatesWithinWatermark. */
   def streamEventPattern(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.readParquet(spark, s"$dir/events.parquet").schema
     val name = "stream_event_pattern_sink"
     onStreamSession(spark, 8) { s =>
       def src = Tables.normalize(
@@ -507,7 +507,7 @@ object PipelineQueries {
     * identical score. Same memory-sink caveat as
     * [[streamWindowCounts]]. */
   def streamCorpusPrep(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = Tables.readParquet(spark, s"$dir/documents.parquet").schema
     val name = "stream_corpus_prep_sink"
     onStreamSession(spark, 8) { s =>
       val src = s.readStream.schema(schema).option("basePath", dir)
@@ -571,7 +571,7 @@ object PipelineQueries {
     * deterministic and double sums would drift in the last ulp.
     * Same gate-only memory-sink caveat as [[streamWindowCounts]]. */
   def streamModelScore(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = Tables.readParquet(spark, s"$dir/documents.parquet").schema
     val name = "stream_model_score_sink"
     onStreamSession(spark, 8) { s =>
       val src = s.readStream.schema(schema).option("basePath", dir)
@@ -624,7 +624,7 @@ object PipelineQueries {
     * `MvMaintenanceSpec` additionally proves multi-batch folding and
     * replay no-ops with manual splits. */
   def streamMvMaintenance(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.readParquet(spark, s"$dir/events.parquet").schema
     val tmp = graft.Tables.scratchDir("graft_mv_maint")
     onStreamSession(spark, 8) { s =>
       val src = Tables.normalize(
@@ -1193,7 +1193,7 @@ object PipelineQueries {
     * batch-side from the sink table. Same gate-only memory-sink
     * caveat as [[streamWindowCounts]]. */
   def streamLmScore(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = Tables.readParquet(spark, s"$dir/documents.parquet").schema
     val name = "stream_lm_score_sink"
     onStreamSession(spark, 8) { s =>
       val docs = graft.Tables(s, dir, "documents")

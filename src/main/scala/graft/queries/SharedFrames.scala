@@ -1,6 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+import graft.pipeline.BatchPipeline
 
 /** Persist-once shared-frame tier for gate queries.
   *
@@ -19,15 +22,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `spark.graft.scratch.uri` ([[graft.Tables.scratchDir]]), so on a
   * cluster the tier lands on a shared filesystem every executor can
   * reach.
+  *
+  * Reads are schema-carrying: every read of a frame, the first
+  * included, takes the schema of the file its build wrote and runs no
+  * Spark job (inference would run one to parse that same footer).
   */
 private[graft] object SharedFrames {
 
   /** Value records the frame names DECLARED by the build alongside
     * the scratch path — later callers resolve frames by those names
     * (never by listing the directory, whose contents an external tmp
-    * cleaner or a stray file could misrepresent). */
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Seq[String])]()
+    * cleaner or a stray file could misrepresent) — and each frame's
+    * scan schema as the build wrote it (None: the read infers). */
+  private val built = new java.util.concurrent.ConcurrentHashMap[
+    String, (String, Seq[(String, Option[StructType])])]()
 
   /** Tier names whose build ran since the last [[drainBuilt]] — the
     * bench drains this after each query so first-caller attribution
@@ -55,8 +63,9 @@ private[graft] object SharedFrames {
   /** First caller per (applicationId, sfDir, name) runs `build` (a
     * seq of frame name → definition), persists every frame to one
     * scratch dir, and returns the read-back handles; later callers
-    * read the persisted parquet by the recorded names. The write goes
-    * through repartition(1) — NOT coalesce(1), which would collapse
+    * read the persisted parquet by the recorded names and schemas
+    * ([[BatchPipeline.dirScanSchema]] right after the write). The write
+    * goes through repartition(1) — NOT coalesce(1), which would collapse
     * the whole upstream computation into one task; the shuffle
     * boundary keeps the build parallel while only the (small) result
     * funnels to one file.
@@ -76,8 +85,11 @@ private[graft] object SharedFrames {
         df.repartition(1).write.mode("overwrite").parquet(s"$p/$n")
       }
       buildLog.add(name)
-      (p, frames.map(_._1))
+      (p, frames.map { case (n, _) =>
+        n -> BatchPipeline.dirScanSchema(spark, s"$p/$n") })
     })
-    names.map(n => n -> spark.read.parquet(s"$path/$n")).toMap
+    names.map { case (n, schema) =>
+      n -> schema.fold(spark.read)(spark.read.schema).parquet(s"$path/$n")
+    }.toMap
   }
 }

@@ -135,7 +135,8 @@ class LauncherSpec extends SparkSpec {
     PostedEvents.n.set(0)
     val qs = Launcher.startStreams(spark, args, configs,
       graft.compile.ConfigCompiler.Options(),
-      poster = Some(() => new EventCountingPoster))
+      poster = Some(() => new EventCountingPoster),
+      triggerInterval = "100 milliseconds")
     assert(qs.size == 2)
     qs.foreach(_.processAllAvailable())
     // a late-arriving file is picked up by the already-running streams
@@ -206,7 +207,7 @@ class LauncherSpec extends SparkSpec {
     val qs = Launcher.startStreams(spark, args, configs,
       graft.compile.ConfigCompiler.Options(),
       poster = Some(() => new EventCountingPoster),
-      schema = Some(schema))
+      schema = Some(schema), triggerInterval = "100 milliseconds")
     qs.foreach(_.processAllAvailable())
     qs.foreach(_.stop())
     // every row mapped exactly once...
