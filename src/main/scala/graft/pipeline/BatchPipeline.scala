@@ -27,8 +27,7 @@ import graft.sink.{EventBatchSink, EventPoster, SinkDlqRecord}
   * each config's files are read with ONE vectorized
   * `spark.read.parquet(paths*)` scan (predicate pushdown + column
   * pruning intact), and the per-row mapping is the compiled projection.
-  * Only the posting stage repartitions (the analog of the reference's
-  * AddRandomKey fan-out).
+  * Posting runs in the scan's own partitions, one sink per partition.
   *
   * Routing runs driver-side below [[DistributedRouteThreshold]] (a few
   * thousand string prefix tests are cheaper than a job) and as a
@@ -78,61 +77,50 @@ object BatchPipeline {
       counters: BatchCounters,
       imported: Seq[String])
 
-  /** Route a file list to configs driver-side (first-match-wins,
-    * PARQUET-only — P2+P3). Kept for small lists and tests; [[run]]
-    * switches to [[routeFilesDistributed]] past the threshold. */
+  /** Route a file list to configs driver-side in ONE first-match-wins
+    * pass (`M/main.py:37-63`): the PARQUET configs' path lists (P2+P3),
+    * the matched count per config (every file type, zeros kept —
+    * `matched_<config_id>`, `M/main.py:55-58`) and the unmatched count.
+    * [[run]] uses it up to [[DistributedRouteThreshold]] URIs and
+    * [[routeFilesDistributed]] past it; both return the same triple. */
+  def routeFilesOnDriver(uris: Seq[String], configs: Seq[SourceConfig])
+      : (Map[SourceConfig, Seq[String]], Map[String, Long], Long) = {
+    val byConfig =
+      uris.groupBy(u => configs.find(c => u.startsWith(c.sourcePrefix)))
+    def n(c: Option[SourceConfig]) = byConfig.get(c).fold(0L)(_.size.toLong)
+    (byConfig.collect { case (Some(c), us) if c.isParquet => c -> us },
+      configs.map(c => c.configId -> n(Some(c))).toMap, n(None))
+  }
+
+  /** The path lists of [[routeFilesOnDriver]]. */
   def routeFiles(uris: Seq[String], configs: Seq[SourceConfig])
       : Map[SourceConfig, Seq[String]] =
-    uris.flatMap { uri =>
-      configs.find(c => uri.startsWith(c.sourcePrefix)).map(_ -> uri)
-    }
-      .groupBy(_._1)
-      .collect { case (cfg, pairs) if cfg.isParquet => cfg -> pairs.map(_._2) }
-      .toMap
+    routeFilesOnDriver(uris, configs)._1
 
   /** Distributed routing: the prefix matching runs as a codegen'd
     * [[Router.route]] plan over a URI DataFrame, not a driver loop.
-    * Only the per-config path lists needed to build the scans (plus
-    * their counts) come back to the driver — the unrouted URI set is
-    * never driver-materialized. */
+    * Exactly TWO jobs over the frame: one [[Router.routeCounts]] pass
+    * (per-config matched + `__unmatched__`, at P2 — before the parquet
+    * filter, as the reference counts) and one routed-parquet collect
+    * for the path lists the scans need; the unrouted URI set is never
+    * driver-materialized. At million-object scale a third pass is a
+    * third full listing scan — don't add one. */
   def routeFilesDistributed(spark: SparkSession, uris: Seq[String],
       configs: Seq[SourceConfig])
       : (Map[SourceConfig, Seq[String]], Map[String, Long], Long) = {
     import spark.implicits._
     val uriDf = uris.toDF("uri")
-    routeUriFrame(uriDf, configs)
-  }
-
-  /** Same, from an already-distributed URI frame (e.g. a listing scan).
-    * Exactly TWO jobs over the frame: one [[Router.routeCounts]] pass
-    * (per-config matched + `__unmatched__`, at P2 — before the parquet
-    * filter, as the reference counts) and one routed-parquet collect
-    * for the path lists the scans need. At million-object scale a third
-    * pass is a third full listing scan — don't add one. */
-  def routeUriFrame(uriDf: DataFrame, configs: Seq[SourceConfig])
-      : (Map[SourceConfig, Seq[String]], Map[String, Long], Long) = {
-    val countRows = Router.routeCounts(uriDf, configs).collect()
-    val byName = countRows.map(r => r.getString(0) -> r.getLong(1)).toMap
+    val byName = Router.routeCounts(uriDf, configs).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
     val matched = configs.map(c =>
       c.configId -> byName.getOrElse(c.configId, 0L)).toMap
-    val routedRows = Router.routeParquet(uriDf, configs).collect()
     val byId = configs.map(c => c.configId -> c).toMap
-    val routed = routedRows.groupBy(_.getString(1)).map { case (id, rows) =>
-      byId(id) -> rows.map(_.getString(0)).toSeq
-    }
+    val routed = Router.routeParquet(uriDf, configs).collect()
+      .groupBy(_.getString(1)).map { case (id, rows) =>
+        byId(id) -> rows.map(_.getString(0)).toSeq
+      }
     (routed, matched, byName.getOrElse("__unmatched__", 0L))
   }
-
-  /** True iff `path` exists and its Parquet footer parses into a Spark
-    * schema (see [[footer]]). The per-file check mirrors the reference's
-    * per-file open/except (`M/main_batch.py:86-103`): a bad file — no
-    * `PAR1` magic, or a valid trailer over an unreadable footer — is
-    * counted and skipped, the rest of the config's files still load.
-    * The footers are read one file at a time before any job runs —
-    * exact accounting for backfills up to ~100k files; beyond that rely on `ignoreCorruptFiles` (always set
-    * on the scan) and forgo exact per-config counts. */
-  def readableParquet(spark: SparkSession, path: String): Boolean =
-    Try(footer(spark, path)).isSuccess
 
   /** `path`'s status and the Spark schema of its Parquet footer, parsed
     * as schema inference parses it (`ParquetFileFormat.
@@ -194,20 +182,6 @@ object BatchPipeline {
       : Option[StructType] =
     Try(paths.map(footer(spark, _))).toOption.flatMap(scanSchema)
 
-  /** [[footerScanSchema]] of directory `dir`'s children, less the names
-    * every scan's file index drops (`_SUCCESS`, `.`-prefixed checksum
-    * files): the schema a scan of `dir` infers. None (the scan infers)
-    * when any other child would change that — a summary file, a
-    * subdirectory, a hidden or unreadable file. */
-  private[graft] def dirScanSchema(spark: SparkSession, dir: String)
-      : Option[StructType] = {
-    val p = new Path(dir)
-    Try(p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p))
-      .toOption.flatMap(children => footerScanSchema(spark, children.toSeq
-        .map(_.getPath).filterNot(c => c.getName == "_SUCCESS" ||
-          c.getName.startsWith(".")).map(_.toString)))
-  }
-
   /** The footer check of each config's paths: the readable ones, the
     * corrupt count, and the scan schema the readable footers give. */
   private final case class Checked(readable: Seq[String], corrupt: Long,
@@ -222,7 +196,16 @@ object BatchPipeline {
         scanSchema(good.map(_._2)))
     }
 
-  /** Split each config's paths into (readable, corrupt-count). */
+  /** Split each config's paths into (readable, corrupt-count): a path
+    * is readable iff its [[footer]] parses into a Spark schema. The
+    * per-file check mirrors the reference's per-file open/except
+    * (`M/main_batch.py:86-103`): a bad file — no `PAR1` magic, or a
+    * valid trailer over an unreadable footer — is counted and skipped,
+    * the rest of the config's files still load. The footers are read
+    * one file at a time before any job runs — exact accounting for
+    * backfills up to ~100k files; beyond that rely on
+    * `ignoreCorruptFiles` (always set on the scan) and forgo exact
+    * per-config counts. */
   def isolateCorrupt(spark: SparkSession,
       routed: Map[SourceConfig, Seq[String]])
       : (Map[SourceConfig, Seq[String]], Map[String, Long]) =
@@ -259,7 +242,7 @@ object BatchPipeline {
   }
 
   /** Transform stage with NO driver-side file list at all — the shape
-    * for lakes past [[routeUriFrame]]'s collect (10⁷-10⁸ objects,
+    * for lakes past [[routeFilesDistributed]]'s collect (10⁷-10⁸ objects,
     * where even the routed path list is a driver-memory hazard). Each
     * parquet config scans its own prefix directly:
     *
@@ -374,11 +357,9 @@ object BatchPipeline {
     * inside this call and never again through the returned frames. A
     * retried task re-posts its partition's batches (the endpoint
     * dedups on `$insert_id`, as the reference relies on,
-    * `M/main.py:272-273`). `parallelism` > 0 repartitions the rows
-    * first — the analog of the reference's 5000-key fan-out
-    * (`M/main.py:296-303`); size it to the cluster, not to 5000. */
+    * `M/main.py:272-273`). */
   def deliver(spark: SparkSession, compiled: Seq[CompiledEvents],
-      posterFactory: () => EventPoster, parallelism: Int = 0): Delivery = {
+      posterFactory: () => EventPoster): Delivery = {
     val counters = compiled.map(_ => Observation())
     val lines = compiled.zip(counters).map { case (c, obs) =>
       c.observed(obs).df.select(when(col("error").isNull,
@@ -386,7 +367,7 @@ object BatchPipeline {
         col("error"))
     }.reduceOption(_ union _).getOrElse(emptyLines(spark))
     val rows = Observation()
-    val output = dlqRecords(lines, posterFactory, parallelism)
+    val output = dlqRecords(lines, posterFactory)
       .observe(rows, count(col("error")).as("transform"),
         count(col("api")).as("api"))
       .localCheckpoint(true)
@@ -410,13 +391,12 @@ object BatchPipeline {
   /** Lazy DLQ records of posting `lines` (`event_json`, `error`): the
     * transform DLQ passed through in `error`, the sink's dead letters in
     * `api`. Evaluation posts. */
-  private def dlqRecords(lines: DataFrame, posterFactory: () => EventPoster,
-      parallelism: Int): DataFrame = {
-    val fanned = if (parallelism > 0) lines.repartition(parallelism) else lines
+  private def dlqRecords(lines: DataFrame, posterFactory: () => EventPoster)
+      : DataFrame = {
     val schema = StructType(Seq(
       StructField("error", lines.schema("error").dataType),
       StructField("api", ApiDlqType)))
-    fanned.mapPartitions { rows: Iterator[Row] =>
+    lines.mapPartitions { rows: Iterator[Row] =>
       val sink = new EventBatchSink(posterFactory())
       def api(d: SinkDlqRecord) = Row(null, Row(d.reason, d.response, d.payload))
       rows.flatMap { r =>
@@ -431,8 +411,7 @@ object BatchPipeline {
     obs.get.map { case (k, v) => k -> v.asInstanceOf[Number].longValue }
 
   /** Posting stage alone: the API DLQ of posting an `event_json` frame,
-    * through the same per-partition sink as [[deliver]]. `parallelism`
-    * as there.
+    * through the same per-partition sink as [[deliver]].
     *
     * CONTRACT: evaluation == delivery. The returned frame is lazy; the
     * first action on it performs the HTTP posting, and re-evaluating it
@@ -440,11 +419,10 @@ object BatchPipeline {
     * materialize it once (`localCheckpoint(true)`) and hand out only
     * the truncated frame. [[run]] and the streaming sink use
     * [[deliver]], which does that for both DLQ channels in one job. */
-  def post(eventsJson: DataFrame, posterFactory: () => EventPoster,
-      parallelism: Int = 0): DataFrame =
+  def post(eventsJson: DataFrame, posterFactory: () => EventPoster)
+      : DataFrame =
     dlqRecords(eventsJson.select(col("event_json"),
-        lit(null).cast(CompiledEvents.ErrorType).as("error")),
-      posterFactory, parallelism)
+        lit(null).cast(CompiledEvents.ErrorType).as("error")), posterFactory)
       .select("api.*")
 
   /** Full pipeline: route -> corrupt-isolate -> one [[deliver]] pass
@@ -456,26 +434,16 @@ object BatchPipeline {
     * are complete when this returns. */
   def run(spark: SparkSession, uris: Seq[String], configs: Seq[SourceConfig],
       posterFactory: () => EventPoster,
-      opts: ConfigCompiler.Options = ConfigCompiler.Options(),
-      postParallelism: Int = 0): Result = {
+      opts: ConfigCompiler.Options = ConfigCompiler.Options()): Result = {
     val (routed, matchedCounts, unmatched) =
       if (uris.size > DistributedRouteThreshold)
         routeFilesDistributed(spark, uris, configs)
-      else {
-        val r = routeFiles(uris, configs)
-        // first-match-wins counting: a URI counts for the FIRST config
-        // whose prefix matches, mirroring `matched_<id>` (`M/main.py:55-58`)
-        val firstMatches = uris.flatMap(u =>
-          configs.find(c => u.startsWith(c.sourcePrefix)).map(_.configId))
-        val firstCounts = configs.map(c => c.configId ->
-          firstMatches.count(_ == c.configId).toLong).toMap
-        (r, firstCounts, (uris.size - firstMatches.size).toLong)
-      }
+      else routeFilesOnDriver(uris, configs)
     val checked = checkFooters(spark, routed)
     val (readable, readErrors) = splitChecked(checked)
     val scans = compiledScans(spark,
       checked.map { case (cfg, c) => cfg -> (c.readable, c.schema) }, opts)
-    val d = deliver(spark, scans.map(_._2), posterFactory, postParallelism)
+    val d = deliver(spark, scans.map(_._2), posterFactory)
     Result(
       scans.map(_._2.json).reduceOption(_ union _).getOrElse(emptyJson(spark)),
       d.transformDlq, d.apiDlq,

@@ -54,21 +54,10 @@ object StreamingPipeline {
     r.parquet(path)
   }
 
-  /** One config's streaming transform: file-source scan under the
-    * config's prefix dir -> compiled mapping. The caller guarantees
-    * every file under `dir` belongs to `cfg`; for a mixed directory
-    * shared by several configs use [[transformStreamRouted]]. */
-  def transformStream(spark: SparkSession, cfg: SourceConfig, dir: String,
-      schema: StructType,
-      opts: ConfigCompiler.Options = ConfigCompiler.Options(),
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val input = paced(spark, schema, dir, maxFilesPerTrigger)
-    ConfigCompiler.compile(cfg, input, opts).df
-  }
-
-  /** One config's streaming transform over a SHARED watch directory:
-    * each arriving file is routed first-match-wins against the FULL
-    * config list (`RouteFileToConfig`, `M/main.py:37-63,466-495`) and
+  /** One config's streaming transform over a watch directory, which
+    * several configs may share: each arriving file is routed
+    * first-match-wins against the FULL config list
+    * (`RouteFileToConfig`, `M/main.py:37-63,466-495`) and
     * only files whose first match is `cfg` are transformed — so N
     * configs watching one directory map every file exactly once, by
     * exactly its first matching config. The route predicate is the
@@ -103,7 +92,11 @@ object StreamingPipeline {
     *    when the query starts, a glob need not;
     *  - `dir` holds a `_spark_metadata` sink log (or the check fails):
     *    Spark reads such a directory through the log, which hides files
-    *    of uncommitted batches, and a glob path would bypass it. */
+    *    of uncommitted batches, and a glob path would bypass it.
+    * The whole `dir` is listed without recursion, so in these fallbacks
+    * a file in a subdirectory of `dir` is never delivered, even one
+    * under the prefix; only the leaf glob reaches a prefix-named
+    * subdirectory's files. */
   private[graft] def routedSourcePath(spark: SparkSession, dir: String,
       prefix: String): String = {
     def sinkLog = scala.util.Try {
@@ -116,7 +109,7 @@ object StreamingPipeline {
   }
 
   /** Wire a compiled stream (`event`, `properties`, `error`,
-    * `_counters`, as [[transformStream]] returns it) to the
+    * `_counters`, as [[transformStreamRouted]] returns it) to the
     * batched/retrying sink + DLQ sinks via foreachBatch. DLQ frames are handed to the caller's writers so
     * tests can collect and production can append to storage (K2/K3 are
     * pluggable topics in the reference, `M/main.py:497-502,519-523`).

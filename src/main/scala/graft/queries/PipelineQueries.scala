@@ -795,59 +795,14 @@ object PipelineQueries {
     * sequentially. Every derived frame localCheckpoints BEFORE the
     * store overwrite (the foreachBatch read-then-overwrite house
     * rule). Output: the final persisted graph store — exactly what a
-    * deployment serves from after two ingest ticks. */
+    * deployment serves from after two ingest ticks. The loop is
+    * [[streamGraphUpsertRun]]'s, fed two add-only waves. */
   def streamGraphAppend(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ext.Similarity
     val emb = Tables(spark, dir, "embeddings")
-    val tmp = graft.Tables.scratchDir("graft_graph_stream")
-    val standing = emb.filter(pmod(col("vec_id"), lit(10)) =!= 9)
-      .select(col("vec_id"), col("embedding"))
-    standing.write.mode("overwrite").parquet(s"$tmp/corpus")
-    // the standing graph is byte-identical to the shared graph_append
-    // tier's banded base build — read the persisted frame, don't
-    // re-run the 3-round NN-Descent
-    ExtQueries.graphAppendBaseGraph(spark, dir)
-      .write.mode("overwrite").parquet(s"$tmp/graph")
-    onStreamSession(spark, 8) { s =>
-      def writeWave(m: Long): Unit = emb
-        .filter(pmod(col("vec_id"), lit(20)) === m)
-        .select(col("vec_id"), col("embedding"))
-        .write.mode("append").parquet(s"$tmp/in")
-      writeWave(9)
-      val q = s.readStream
-        .schema("vec_id LONG, embedding ARRAY<FLOAT>")
-        .parquet(s"$tmp/in")
-        .writeStream
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          val corpus = s.read.parquet(s"$tmp/corpus")
-          val graph = s.read.parquet(s"$tmp/graph")
-          val delta = Similarity.graphAppend(corpus, col("vec_id"),
-            col("embedding"), graph, b, col("vec_id"),
-            col("embedding"), k = 8, beam = 16, hops = 3, entries = 8)
-          val touched = delta.filter(col("src") === "updated")
-            .select(col("node_id")).distinct()
-          val merged = delta.filter(col("src") =!= "dropped")
-            .select(col("node_id"), col("nbr_id"), col("rank"),
-              col("cosine"))
-            .unionByName(graph
-              .join(touched, Seq("node_id"), "left_anti")
-              .select(col("node_id"), col("nbr_id"), col("rank"),
-                col("cosine")))
-            .localCheckpoint(true)
-          val newVecs = b.select(col("vec_id"), col("embedding"))
-            .localCheckpoint(true)
-          merged.write.mode("overwrite").parquet(s"$tmp/graph")
-          newVecs.write.mode("append").parquet(s"$tmp/corpus")
-          ()
-        }
-        .option("checkpointLocation", s"$tmp/_ck")
-        .start()
-      q.processAllAvailable()
-      writeWave(19)
-      q.processAllAvailable()
-      q.stop()
-      s.read.parquet(s"$tmp/graph")
-    }
+    def wave(m: Long): DataFrame = emb
+      .filter(pmod(col("vec_id"), lit(20)) === m)
+      .select(lit("add").as("op"), col("vec_id"), col("embedding"))
+    streamGraphUpsertRun(spark, dir, Seq(wave(9), wave(19)))
   }
 
   /** STREAMING graph-index UPSERT — the full CDC-shaped maintenance

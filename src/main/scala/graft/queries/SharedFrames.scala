@@ -1,9 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.types.StructType
-
-import graft.pipeline.BatchPipeline
 
 /** Persist-once shared-frame tier for gate queries.
   *
@@ -24,8 +22,8 @@ import graft.pipeline.BatchPipeline
   * reach.
   *
   * Reads are schema-carrying: every read of a frame, the first
-  * included, takes the schema of the file its build wrote and runs no
-  * Spark job (inference would run one to parse that same footer).
+  * included, takes the schema its build wrote and runs no Spark job
+  * (inference would run one to parse that same footer).
   */
 private[graft] object SharedFrames {
 
@@ -33,9 +31,9 @@ private[graft] object SharedFrames {
     * the scratch path — later callers resolve frames by those names
     * (never by listing the directory, whose contents an external tmp
     * cleaner or a stray file could misrepresent) — and each frame's
-    * scan schema as the build wrote it (None: the read infers). */
+    * schema as the build wrote it. */
   private val built = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Seq[(String, Option[StructType])])]()
+    String, (String, Seq[(String, StructType)])]()
 
   /** Tier names whose build ran since the last [[drainBuilt]] — the
     * bench drains this after each query so first-caller attribution
@@ -63,12 +61,15 @@ private[graft] object SharedFrames {
   /** First caller per (applicationId, sfDir, name) runs `build` (a
     * seq of frame name → definition), persists every frame to one
     * scratch dir, and returns the read-back handles; later callers
-    * read the persisted parquet by the recorded names and schemas
-    * ([[BatchPipeline.dirScanSchema]] right after the write). The write
-    * goes through repartition(1) — NOT coalesce(1), which would collapse
-    * the whole upstream computation into one task; the shuffle
-    * boundary keeps the build parallel while only the (small) result
-    * funnels to one file.
+    * read the persisted parquet by the recorded names and schemas. A
+    * frame's recorded schema is the one it was written with, every
+    * field nullable: what inference gives a scan of the written files,
+    * since Spark stores the written schema in the footer and a file
+    * scan reads every field as nullable. The write goes through
+    * repartition(1) — NOT coalesce(1), which would collapse the whole
+    * upstream computation into one task; the shuffle boundary keeps
+    * the build parallel while only the (small) result funnels to one
+    * file.
     *
     * Bench-attribution note: if the BUILDER gate's measurement window
     * absorbs steal and is re-measured, the retry reads the
@@ -85,11 +86,11 @@ private[graft] object SharedFrames {
         df.repartition(1).write.mode("overwrite").parquet(s"$p/$n")
       }
       buildLog.add(name)
-      (p, frames.map { case (n, _) =>
-        n -> BatchPipeline.dirScanSchema(spark, s"$p/$n") })
+      (p, frames.map { case (n, df) =>
+        n -> GraftSqlBridge.asNullable(df.schema) })
     })
     names.map { case (n, schema) =>
-      n -> schema.fold(spark.read)(spark.read.schema).parquet(s"$path/$n")
+      n -> spark.read.schema(schema).parquet(s"$path/$n")
     }.toMap
   }
 }

@@ -37,10 +37,6 @@ final case class SinkDlqRecord(reason: String, response: String, payload: String
   * partition, no shared state, DLQ records returned as data (Spark has
   * no bundle/window mismatch, so the reference's finish_bundle
   * re-windowing workaround disappears; SURVEY.md §2.9).
-  *
-  * At scale: posting parallelism = partition count; the reference's
-  * AddRandomKey+GroupByKey fan-out (`M/main.py:296-303,507-508`) is a
-  * plain `repartition(n)` upstream.
   */
 final class EventBatchSink(
     poster: EventPoster,
@@ -52,8 +48,8 @@ final class EventBatchSink(
   extends Serializable {
 
   // each event is UTF-8 encoded once, on add; flush joins those bytes
-  private val buffer = new ArrayBuffer[String]()
-  private val encoded = new ArrayBuffer[Array[Byte]]()
+  // and decodes them again only to dead-letter them
+  private val buffer = new ArrayBuffer[Array[Byte]]()
   private var bufferBytes = 0L
   private var sent = 0L
 
@@ -65,8 +61,7 @@ final class EventBatchSink(
     * triggered a flush that dead-lettered. */
   def add(eventJson: String): Seq[SinkDlqRecord] = {
     val bytes = eventJson.getBytes(UTF_8)
-    buffer += eventJson
-    encoded += bytes
+    buffer += bytes
     bufferBytes += bytes.length
     if (buffer.size >= batchSizeEvents || bufferBytes >= batchSizeBytes) flush()
     else Nil
@@ -75,7 +70,7 @@ final class EventBatchSink(
   /** Flush any buffered events; returns DLQ records for failures. */
   def flush(): Seq[SinkDlqRecord] = {
     if (buffer.isEmpty) return Nil
-    val gz = EventBatchSink.gzip(EventBatchSink.joinLines(encoded, bufferBytes))
+    val gz = EventBatchSink.gzip(EventBatchSink.joinLines(buffer, bufferBytes))
     val n = buffer.size
     var retries = 0
     var dlq = Vector.empty[SinkDlqRecord]
@@ -92,8 +87,7 @@ final class EventBatchSink(
           retries += 1
           backoff(retries)
         case Some(r) => // non-retryable client error: dead-letter the batch
-          dlq = buffer.iterator.map(e => SinkDlqRecord(
-            s"client_error_${r.status}", r.body.take(500), e)).toVector
+          dlq = deadLetters(s"client_error_${r.status}", r.body.take(500))
           done = true
         case None =>
           retries += 1
@@ -101,13 +95,16 @@ final class EventBatchSink(
       }
     }
     if (!done && retries == maxRetries)
-      dlq = buffer.iterator.map(e =>
-        SinkDlqRecord("max_retries_reached", "", e)).toVector
+      dlq = deadLetters("max_retries_reached", "")
     buffer.clear()
-    encoded.clear()
     bufferBytes = 0
     dlq
   }
+
+  /** One DLQ record per buffered event, its payload decoded back. */
+  private def deadLetters(reason: String, response: String): Vector[SinkDlqRecord] =
+    buffer.iterator.map(b =>
+      SinkDlqRecord(reason, response, new String(b, UTF_8))).toVector
 
   private def backoff(retries: Int): Unit =
     sleeper((math.min(math.pow(2, retries) + jitter(), 60.0) * 1000).toLong)

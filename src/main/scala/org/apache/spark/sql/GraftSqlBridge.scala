@@ -8,12 +8,16 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * (`Dataset.ofRows` has no public equivalent — every Spark extension
   * library that ships its own logical operators carries exactly this
   * bridge), and a custom [[Expression]] into a [[Column]] without
-  * registering it as a SQL function. Kept to single forwarding calls
-  * in a single file so the internal surface area is auditable. */
+  * registering it as a SQL function, and a schema with every field
+  * nullable — the schema a file scan reads, whatever the writer
+  * declared. Kept to single forwarding calls in a single file so the
+  * internal surface area is auditable. */
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(
       spark.asInstanceOf[classic.SparkSession], plan)
 
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  def asNullable(t: types.StructType): types.StructType = t.asNullable
 }

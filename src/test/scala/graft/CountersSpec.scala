@@ -124,11 +124,12 @@ class CountersSpec extends SparkSpec {
     java.util.Arrays.fill(bytes, bytes.length - 8 - footerLen, bytes.length - 8, 0.toByte)
     val bad = Files.write(dir.resolve("a_bad.parquet"), bytes)
     assert(new String(bytes.takeRight(4), "US-ASCII") == "PAR1")
-    assert(!BatchPipeline.readableParquet(spark, bad.toString))
     val cfg = SourceConfig(
       configId = "t", sourcePrefix = s"$dir/",
       eventNameField = Some("event_type"),
       fieldMappings = Seq(FieldMapping("uid", "$user_id", CastType.StringT)))
+    assert(BatchPipeline.isolateCorrupt(spark, Map(cfg -> Seq(bad.toString)))
+      ._2 == Map("t" -> 1L))
     // either path order: the scan's own inference would read the
     // lexicographically first file, the bad one
     for (uris <- Seq(Seq(bad, good), Seq(good, bad)).map(_.map(_.toString))) {
@@ -196,5 +197,9 @@ class CountersSpec extends SparkSpec {
       driverRouted.map { case (c, ps) => c.configId -> ps.toSet })
     assert(counts == Map("ca" -> 7500L, "cb" -> 7500L, "call" -> 7500L))
     assert(unmatched == 7500L)
+    // the driver pass run() takes below the threshold counts the same
+    val (_, driverCounts, driverUnmatched) =
+      BatchPipeline.routeFilesOnDriver(uris, cfgs)
+    assert(driverCounts == counts && driverUnmatched == 7500L)
   }
 }

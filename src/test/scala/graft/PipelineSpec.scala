@@ -89,8 +89,8 @@ class PipelineSpec extends SparkSpec {
     val schema = spark.read.parquet(s"$dir/src/part.parquet").schema
     // part.parquet is itself a directory (Spark writer layout) — the
     // file stream source lists non-recursively, so stream that dir
-    val compiled = StreamingPipeline.transformStream(
-      spark, cfgFor(dir), s"$dir/src/part.parquet", schema)
+    val compiled = StreamingPipeline.transformStreamRouted(spark, cfgFor(dir),
+      Seq(cfgFor(dir)), s"$dir/src/part.parquet", schema)
     var okCount = 0L
     var dlqCount = 0L
     val q = StreamingPipeline.sinkStream(compiled, () => new Always200,
@@ -121,8 +121,8 @@ class PipelineSpec extends SparkSpec {
   test("streaming counters surface per micro-batch via foreachBatch") {
     val dir = writeTempEvents()
     val schema = spark.read.parquet(s"$dir/src/part.parquet").schema
-    val compiled = StreamingPipeline.transformStream(
-      spark, cfgFor(dir), s"$dir/src/part.parquet", schema)
+    val compiled = StreamingPipeline.transformStreamRouted(spark, cfgFor(dir),
+      Seq(cfgFor(dir)), s"$dir/src/part.parquet", schema)
     var counters = Map.empty[String, Long]
     val q = StreamingPipeline.sinkStream(compiled, () => new Always200,
       _ => (), _ => (), triggerInterval = "1 seconds",
@@ -332,8 +332,8 @@ class PipelineSpec extends SparkSpec {
     val schema1 = spark.read.parquet(s"$dir1/src/part.parquet").schema
     PostedEvents.n.set(0)
     val q1 = StreamingPipeline.sinkStream(
-      StreamingPipeline.transformStream(
-        spark, cfgFor(dir1), s"$dir1/src/part.parquet", schema1),
+      StreamingPipeline.transformStreamRouted(spark, cfgFor(dir1),
+        Seq(cfgFor(dir1)), s"$dir1/src/part.parquet", schema1),
       () => new EventCountingPoster, _ => (), _ => (),
       triggerInterval = "1 seconds")
       .option("checkpointLocation", s"$dir1/ckpt_once").start()
@@ -347,8 +347,8 @@ class PipelineSpec extends SparkSpec {
     PostedEvents.n.set(0)
     var apiRows = 0L
     val q2 = StreamingPipeline.sinkStream(
-      StreamingPipeline.transformStream(
-        spark, cfgFor(dir2), s"$dir2/src/part.parquet", schema2),
+      StreamingPipeline.transformStreamRouted(spark, cfgFor(dir2),
+        Seq(cfgFor(dir2)), s"$dir2/src/part.parquet", schema2),
       () => new EventCounting400Poster, _ => (),
       api => { apiRows += api.count(); api.count() },
       triggerInterval = "1 seconds")
@@ -376,8 +376,8 @@ class PipelineSpec extends SparkSpec {
     try {
       val (q, read) = withScanRecords {
         val q = StreamingPipeline.sinkStream(
-          StreamingPipeline.transformStream(
-            spark, cfgFor(dir), s"$dir/src/part.parquet", schema),
+          StreamingPipeline.transformStreamRouted(spark, cfgFor(dir),
+            Seq(cfgFor(dir)), s"$dir/src/part.parquet", schema),
           poster, writeTransformDlq, writeApiDlq,
           triggerInterval = "1 seconds", onCounters = onCounters)
           .option("checkpointLocation", s"$dir/ckpt_once").start()

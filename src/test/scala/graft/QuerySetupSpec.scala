@@ -140,8 +140,8 @@ class QuerySetupSpec extends SparkSpec {
     Posted.take()
     val t0 = System.currentTimeMillis() / 1000
     val q = StreamingPipeline.sinkStream(
-      StreamingPipeline.transformStream(spark, cfg(watch.toString),
-        watch.toString, schema, live),
+      StreamingPipeline.transformStreamRouted(spark, cfg(watch.toString),
+        Seq(cfg(watch.toString)), watch.toString, schema, live),
       () => new IdRecordingPoster, _ => (), _ => (),
       triggerInterval = "100 milliseconds")
       .option("checkpointLocation", s"$src/ckpt").start()
