@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -9,7 +9,7 @@ object Tables {
 
   /** Sessions must set `spark.sql.legacy.parquet.nanosAsLong=true`
     * (Spark's vectorized reader has no TIMESTAMP(NANOS) type — the
-    * `events.ts` column is one). [[Sessions.tune]] applies it. The read
+    * `events.ts` column is one). [[Sessions.builder]] sets it. The read
     * is schema-carrying ([[readParquet]]). */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
     normalize(readParquet(spark, s"$sfDir/$name.parquet"))
@@ -21,6 +21,18 @@ object Tables {
   def readParquet(spark: SparkSession, path: String): DataFrame =
     graft.pipeline.BatchPipeline.footerScanSchema(spark, Seq(path))
       .fold(spark.read)(spark.read.schema).parquet(path)
+
+  /** Overwrite `path` with `df` and read it back without an inference
+    * job — the mirror of [[readParquet]] for a store the code writes:
+    * Spark keeps the written schema in the footer and a file scan
+    * reads every field nullable, so `df.schema` made nullable is the
+    * schema inference would give. */
+  def writeParquet(df: DataFrame, path: String): DataFrame = {
+    df.write.mode("overwrite").parquet(path)
+    df.sparkSession.read
+      .schema(GraftSqlBridge.asNullable(df.schema))
+      .parquet(path)
+  }
 
   /** Cache + eagerly materialize a (small) intermediate frame. Lazy
     * caches that feed multiple branches of ONE job cause a computation

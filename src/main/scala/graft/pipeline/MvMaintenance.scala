@@ -127,7 +127,10 @@ object MvMaintenance {
     * contract: consume (or checkpoint) the frame before TWO further
     * [[mergeBatch]] calls land — the resolved directory survives the
     * next merge's sweep (one generation of grace) but not the one
-    * after. */
+    * after. This read and [[mergeBatch]]'s read of the previous
+    * version infer the schema rather than pass the one the merge
+    * wrote ([[graft.Tables.writeParquet]]): they must work after a
+    * restart, when no in-memory schema exists. */
   def readSummary(spark: SparkSession, summaryDir: String): DataFrame = {
     val b = lastMerged(summaryDir)
     require(b >= 0, s"no committed summary under $summaryDir")

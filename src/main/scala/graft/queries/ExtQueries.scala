@@ -1118,13 +1118,14 @@ object ExtQueries {
     val standing = emb.filter(col("vec_id") % 5 =!= 4)
     val incoming = emb.filter(col("vec_id") % 5 === 4)
     val tmp = graft.Tables.scratchDir("graft_pq_append")
-    Similarity.pqTrainCodebooks(standing, col("vec_id"),
-        col("embedding"), m = 16, ksub = 64, iters = 2, sampleMod = 1)
-      .write.mode("overwrite").parquet(s"$tmp/codebooks")
-    val frozen = spark.read.parquet(s"$tmp/codebooks")
-    Similarity.pqEncode(standing, col("vec_id"), col("embedding"), frozen)
-      .write.mode("overwrite").parquet(s"$tmp/codes")
-    spark.read.parquet(s"$tmp/codes")
+    val frozen = Tables.writeParquet(
+      Similarity.pqTrainCodebooks(standing, col("vec_id"),
+        col("embedding"), m = 16, ksub = 64, iters = 2, sampleMod = 1),
+      s"$tmp/codebooks")
+    Tables.writeParquet(
+        Similarity.pqEncode(standing, col("vec_id"), col("embedding"),
+          frozen),
+        s"$tmp/codes")
       .unionByName(
         Similarity.pqEncode(incoming, col("vec_id"), col("embedding"),
           frozen))
@@ -2164,20 +2165,20 @@ object ExtQueries {
       : DataFrame = {
     val emb = Tables(spark, dir, "embeddings")
     val tmp = graft.Tables.scratchDir("graft_hybrid_ivf")
-    emb.orderBy(col("vec_id").asc).limit(16)
-      .select(col("vec_id").as("cell_id"),
-        posexplode(col("embedding")).as(Seq("i", "cx")))
-      .select(col("cell_id"), col("i"),
-        col("cx").cast("double").as("cx"))
-      .write.mode("overwrite").parquet(s"$tmp/centroids")
-    Similarity.cellAssignmentsFor(emb, col("vec_id"), col("embedding"),
-        spark.read.parquet(s"$tmp/centroids"))
-      .write.mode("overwrite").parquet(s"$tmp/assignments")
+    val centroids = Tables.writeParquet(emb.orderBy(col("vec_id").asc)
+        .limit(16)
+        .select(col("vec_id").as("cell_id"),
+          posexplode(col("embedding")).as(Seq("i", "cx")))
+        .select(col("cell_id"), col("i"),
+          col("cx").cast("double").as("cx")),
+      s"$tmp/centroids")
+    val assignments = Tables.writeParquet(
+      Similarity.cellAssignmentsFor(emb, col("vec_id"), col("embedding"),
+        centroids),
+      s"$tmp/assignments")
     Similarity.ivfTopKFromIndex(emb, col("vec_id"), col("embedding"),
         emb.filter(col("vec_id") < 10), col("vec_id"),
-        col("embedding"), k = 10, nProbe = 4,
-        spark.read.parquet(s"$tmp/centroids"),
-        spark.read.parquet(s"$tmp/assignments"))
+        col("embedding"), k = 10, nProbe = 4, centroids, assignments)
       .select(col("query_id"), col("nbr_id").as("doc_id"),
         col("rank").as("vec_rank"))
   }
@@ -2741,13 +2742,11 @@ object ExtQueries {
     val tmp = graft.Tables.scratchDir("graft_pq_index")
     val (cbs, codes) = Similarity.buildPqIndex(emb, col("vec_id"),
       col("embedding"), m = 16, ksub = 64, iters = 2, sampleMod = 1)
-    cbs.write.mode("overwrite").parquet(s"$tmp/codebooks")
-    codes.write.mode("overwrite").parquet(s"$tmp/codes")
     Similarity.ivfPqTopKFromIndex(emb, col("vec_id"), col("embedding"),
       emb.filter(col("vec_id") < 10), col("vec_id"), col("embedding"),
       k = 10, numCells = 16, nProbe = 4,
-      spark.read.parquet(s"$tmp/codebooks"),
-      spark.read.parquet(s"$tmp/codes"))
+      Tables.writeParquet(cbs, s"$tmp/codebooks"),
+      Tables.writeParquet(codes, s"$tmp/codes"))
   }
 
   /** PQ quantization-loss audit: exhaustive ADC top-10 (flat PQ — no
@@ -2801,13 +2800,11 @@ object ExtQueries {
     val tmp = graft.Tables.scratchDir("graft_ivf_index")
     val (cent, assign) = Similarity.buildIvfIndex(emb, col("vec_id"),
       col("embedding"), numCells = 16, iters = 3, sampleMod = 4)
-    cent.write.mode("overwrite").parquet(s"$tmp/centroids")
-    assign.write.mode("overwrite").parquet(s"$tmp/assignments")
     Similarity.ivfTopKFromIndex(emb, col("vec_id"), col("embedding"),
       emb.filter(col("vec_id") < 10), col("vec_id"), col("embedding"),
       k = 10, nProbe = 4,
-      spark.read.parquet(s"$tmp/centroids"),
-      spark.read.parquet(s"$tmp/assignments"))
+      Tables.writeParquet(cent, s"$tmp/centroids"),
+      Tables.writeParquet(assign, s"$tmp/assignments"))
   }
 
   /** Persisted-IVF INCREMENTAL APPEND gate
@@ -2828,18 +2825,15 @@ object ExtQueries {
     val (cent, assign) = Similarity.buildIvfIndex(standing,
       col("vec_id"), col("embedding"), numCells = 16, iters = 3,
       sampleMod = 4)
-    cent.write.mode("overwrite").parquet(s"$tmp/centroids")
-    assign.write.mode("overwrite").parquet(s"$tmp/assignments")
-    Similarity.appendIvfAssignments(
-        spark.read.parquet(s"$tmp/assignments"), incoming,
-        col("vec_id"), col("embedding"),
-        spark.read.parquet(s"$tmp/centroids"))
-      .write.mode("overwrite").parquet(s"$tmp/assignments_v2")
+    val centroids = Tables.writeParquet(cent, s"$tmp/centroids")
+    val appended = Tables.writeParquet(
+      Similarity.appendIvfAssignments(
+        Tables.writeParquet(assign, s"$tmp/assignments"), incoming,
+        col("vec_id"), col("embedding"), centroids),
+      s"$tmp/assignments_v2")
     Similarity.ivfTopKFromIndex(emb, col("vec_id"), col("embedding"),
       emb.filter(col("vec_id") < 10), col("vec_id"), col("embedding"),
-      k = 10, nProbe = 4,
-      spark.read.parquet(s"$tmp/centroids"),
-      spark.read.parquet(s"$tmp/assignments_v2"))
+      k = 10, nProbe = 4, centroids, appended)
   }
 
   /** Index-maintenance DRIFT TRIGGER — the readout that decides when
@@ -3279,18 +3273,16 @@ object ExtQueries {
     val history = docs.filter(col("doc_id") % 3 =!= 0)
     val batch = docs.filter(col("doc_id") % 3 === 0)
     val tmp = graft.Tables.scratchDir("graft_lsh_index")
-    Dedup.minhashBandRows(
-        Dedup.shingles(history, col("doc_id"), col("text"), 3))
-      .write.mode("overwrite").parquet(s"$tmp/band_index")
-    history
-      .select(TextFunctions.canonicalFingerprint(col("text")).as("fp"))
-      .distinct()
-      .write.mode("overwrite").parquet(s"$tmp/fp_ledger")
+    val bandIndex = Tables.writeParquet(Dedup.minhashBandRows(
+        Dedup.shingles(history, col("doc_id"), col("text"), 3)),
+      s"$tmp/band_index")
+    val fpLedger = Tables.writeParquet(history
+        .select(TextFunctions.canonicalFingerprint(col("text")).as("fp"))
+        .distinct(),
+      s"$tmp/fp_ledger")
     val (kept, _) = Dedup.incrementalLshDedup(batch,
-      col("doc_id"), col("text"),
-      spark.read.parquet(s"$tmp/band_index"),
-      history, col("doc_id"), col("text"),
-      spark.read.parquet(s"$tmp/fp_ledger"))
+      col("doc_id"), col("text"), bandIndex,
+      history, col("doc_id"), col("text"), fpLedger)
     kept
   }
 

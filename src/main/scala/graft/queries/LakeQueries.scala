@@ -610,7 +610,9 @@ object LakeQueries {
     * fingerprint (total rows, rows carrying the new column, key sum,
     * new-column sum) pins that evolution loses nothing and
     * fabricates nothing. Per-file footers carry their own schema, so
-    * at 100 TB the merge costs footer reads, not data rewrites. */
+    * at 100 TB the merge costs footer reads, not data rewrites. The
+    * read infers on purpose (not [[Tables.writeParquet]]): merging the
+    * two footers' schemas is what the gate exercises. */
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
     val tmp = graft.Tables.scratchDir("graft_evo")
     val nation = Tables(spark, dir, "nation")
@@ -637,11 +639,9 @@ object LakeQueries {
     val tmp = graft.Tables.scratchDir("graft_compact")
     val ev = Tables(spark, dir, "events")
       .select(col("event_id"), col("user_id"))
-    ev.repartition(16).write.mode("overwrite").parquet(s"$tmp/small")
-    val small = spark.read.parquet(s"$tmp/small")
-    small.repartition(2).write.mode("overwrite")
-      .parquet(s"$tmp/compacted")
-    val compacted = spark.read.parquet(s"$tmp/compacted")
+    val small = Tables.writeParquet(ev.repartition(16), s"$tmp/small")
+    val compacted = Tables.writeParquet(small.repartition(2),
+      s"$tmp/compacted")
     def fp(phase: String, df: DataFrame, nFiles: Int): DataFrame =
       df.agg(count(lit(1)).as("n_rows"),
           sum(col("event_id")).cast("long").as("id_sum"),

@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.Tables
 import graft.config.{CastType, FieldMapping, SourceConfig}
@@ -44,8 +45,8 @@ object PipelineQueries {
   /** Run `f` against an ISOLATED session (`spark.newSession()`: same
     * SparkContext, cache and extensions; private SQL conf + private
     * temp-view catalog) with `spark.sql.shuffle.partitions` scoped
-    * down: a streaming query fixes its STATE partition count from this
-    * setting at start, and every micro-batch commits one disk-backed
+    * down to 8: a streaming query fixes its STATE partition count from
+    * this setting at start, and every micro-batch commits one disk-backed
     * state store per partition per stateful operator (a stream-stream
     * join keeps four per partition). At gate scale the commit fan-out
     * dominates wall time — 32 partitions cost ~14 s for a 46-row join
@@ -57,70 +58,86 @@ object PipelineQueries {
     * concurrent gate queries can't restore each other's stale value —
     * the memory-sink temp view also lands in the private catalog, so
     * parallel runs can't collide on the sink name. */
-  private def onStreamSession[T](spark: SparkSession, n: Int)
+  private def onStreamSession[T](spark: SparkSession)
       (f: SparkSession => T): T = {
     val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
+    s.conf.set("spark.sql.shuffle.partitions", "8")
     f(s)
   }
 
+  /** File-stream source over base table `table` of `dir`, read with
+    * the footer schema of `$dir/$table.parquet`. A file-stream source
+    * needs a directory or a glob — a literal file path is rejected —
+    * so it globs the one file. */
+  private def fileStream(s: SparkSession, dir: String, table: String)
+      : DataFrame =
+    s.readStream
+      .schema(Tables.readParquet(s, s"$dir/$table.parquet").schema)
+      .option("basePath", dir)
+      .parquet(s"$dir/$table*.parquet")
+
+  /** The run loop of every streaming gate: start `w`, drain what has
+    * landed, then land each further wave (a file-arrival write into a
+    * watched folder) and drain again, so each wave is one micro-batch;
+    * then stop. */
+  private def runStream(w: DataStreamWriter[Row],
+      waves: Seq[() => Unit]): Unit = {
+    val q = w.start()
+    try {
+      q.processAllAvailable()
+      waves.foreach { land => land(); q.processAllAvailable() }
+    } finally q.stop()
+  }
+
+  /** [[runStream]] into the memory sink `name`; returns the sink table.
+    *
+    * GATE-ONLY HARNESS: the memory sink collects the whole result on
+    * the driver so the oracle can hash it. Never copy this shape into
+    * a production path — the production streaming sink is
+    * [[graft.pipeline.StreamingPipeline.sinkStream]] (append mode,
+    * foreachBatch, bounded state). */
+  private def runToMemory(df: DataFrame, mode: String, name: String,
+      checkpoint: Option[String] = None,
+      waves: Seq[() => Unit] = Nil): DataFrame = {
+    val w = df.writeStream.outputMode(mode).format("memory").queryName(name)
+    runStream(checkpoint.fold(w)(w.option("checkpointLocation", _)), waves)
+    df.sparkSession.table(name)
+  }
+
+  /** [[runStream]] with `f` as the foreachBatch body. */
+  private def runBatches(src: DataFrame, checkpoint: String,
+      waves: Seq[() => Unit] = Nil)(f: (DataFrame, Long) => Unit): Unit =
+    runStream(src.writeStream.foreachBatch(f)
+      .option("checkpointLocation", checkpoint), waves)
+
   /** Structured Streaming: file source over the events table, 5-minute
     * event-time windows on a watermark, complete-mode memory sink run
-    * to completion.
-    *
-    * GATE-ONLY HARNESS: the complete-mode memory sink collects the
-    * whole result on the driver so the oracle can hash it. Never copy
-    * this shape into a production path — the production streaming sink
-    * is [[graft.pipeline.StreamingPipeline.sinkStream]] (append mode,
-    * foreachBatch, bounded state). Same applies to [[streamSessionize]]. */
-  def streamWindowCounts(spark: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.readParquet(spark, s"$dir/events.parquet").schema
-    val name = "stream_window_counts_sink"
-    onStreamSession(spark, 8) { s =>
-      // file-stream source needs a directory or a glob — a literal file
-      // path is rejected, so glob the one file
-      val stream = s.readStream.schema(schema)
-        .option("basePath", dir)
-        .parquet(s"$dir/events*.parquet")
-      val ev = Tables.normalize(stream)
-      val agg = ev
+    * to completion. */
+  def streamWindowCounts(spark: SparkSession, dir: String): DataFrame =
+    onStreamSession(spark) { s =>
+      val agg = Tables.normalize(fileStream(s, dir, "events"))
         .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-      s.table(name).select(
+      runToMemory(agg, "complete", "stream_window_counts_sink").select(
         unix_timestamp(col("window.start")).as("window_start"),
         col("event_type"), col("n"), col("sum_value"))
     }
-  }
 
   /** Structured Streaming session windows: 10-minute-gap sessions per
     * user via the native session_window operator, run to completion. */
-  def streamSessionize(spark: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.readParquet(spark, s"$dir/events.parquet").schema
-    val name = "stream_sessionize_sink"
-    onStreamSession(spark, 8) { s =>
-      val stream = s.readStream.schema(schema)
-        .option("basePath", dir)
-        .parquet(s"$dir/events*.parquet")
-      val agg = Tables.normalize(stream)
+  def streamSessionize(spark: SparkSession, dir: String): DataFrame =
+    onStreamSession(spark) { s =>
+      val agg = Tables.normalize(fileStream(s, dir, "events"))
         .withWatermark("ts", "10 minutes")
         .groupBy(session_window(col("ts"), "10 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n_events"))
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-      s.table(name).select(
+      runToMemory(agg, "complete", "stream_sessionize_sink").select(
         col("user_id"),
         unix_micros(col("session_window.start")).as("session_start_us"),
         col("n_events"))
     }
-  }
 
   /** Structured Streaming stream-stream inner join with watermarks
     * and a time-interval condition: each purchase joined to the same
@@ -138,15 +155,10 @@ object PipelineQueries {
     * micro-batches (e.g. under maxFilesPerTrigger) — with a tight
     * watermark, a match arriving a batch later than its partner could
     * be dropped as late and the comparison would silently depend on
-    * single-batch delivery. Same gate-only memory-sink caveat as
-    * [[streamWindowCounts]]. */
-  def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.readParquet(spark, s"$dir/events.parquet").schema
-    val name = "stream_stream_join_sink"
-    onStreamSession(spark, 8) { s =>
-      def src = Tables.normalize(
-        s.readStream.schema(schema).option("basePath", dir)
-          .parquet(s"$dir/events*.parquet"))
+    * single-batch delivery. */
+  def streamStreamJoin(spark: SparkSession, dir: String): DataFrame =
+    onStreamSession(spark) { s =>
+      def src = Tables.normalize(fileStream(s, dir, "events"))
       val purchases = src.filter(col("event_type") === "purchase")
         .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
           col("event_id").as("purchase_id"))
@@ -158,15 +170,11 @@ object PipelineQueries {
       val joined = purchases.join(clicks,
         expr("p_user = c_user AND " +
           "c_ts >= p_ts - INTERVAL 10 MINUTES AND c_ts <= p_ts"))
-      val q = joined.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-      s.table(name).select(col("purchase_id"), col("click_id"),
-        unix_micros(col("p_ts")).as("p_us"),
-        unix_micros(col("c_ts")).as("c_us"))
+      runToMemory(joined, "append", "stream_stream_join_sink")
+        .select(col("purchase_id"), col("click_id"),
+          unix_micros(col("p_ts")).as("p_us"),
+          unix_micros(col("c_ts")).as("c_us"))
     }
-  }
 
   /** Custom stateful streaming via
     * `KeyValueGroupedDataset.mapGroupsWithState` — the extension point
@@ -184,13 +192,9 @@ object PipelineQueries {
     * the same bound the built-in streaming aggregation carries. */
   def streamStatefulAgg(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    val schema = Tables.readParquet(spark, s"$dir/events.parquet").schema
-    val name = "stream_stateful_agg_sink"
-    onStreamSession(spark, 8) { s =>
+    onStreamSession(spark) { s =>
       import s.implicits._
-      val src = Tables.normalize(
-        s.readStream.schema(schema).option("basePath", dir)
-          .parquet(s"$dir/events*.parquet"))
+      val src = Tables.normalize(fileStream(s, dir, "events"))
       val typed = src.select(col("user_id"),
           col("value").cast("decimal(18,2)").as("v"))
         .as[(Long, java.math.BigDecimal)]
@@ -207,12 +211,9 @@ object PipelineQueries {
             st.update((n, sum))
             (user, n, sum)
           })
-      val q = updated.toDF("user_id", "n_events", "sum_value")
-        .writeStream.outputMode("update")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-      s.table(name).groupBy("user_id")
+      runToMemory(updated.toDF("user_id", "n_events", "sum_value"),
+          "update", "stream_stateful_agg_sink")
+        .groupBy("user_id")
         .agg(max(struct(col("n_events"), col("sum_value"))).as("m"))
         .select(col("user_id"), col("m.n_events").as("n_events"),
           col("m.sum_value").cast("double").as("sum_value"))
@@ -231,18 +232,14 @@ object PipelineQueries {
   def streamTransformWithState(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
       TTLConfig, TimeMode, TimerValues, ValueState}
-    val schema = Tables.readParquet(spark, s"$dir/events.parquet").schema
-    val name = "stream_tws_sink"
-    onStreamSession(spark, 8) { s =>
+    onStreamSession(spark) { s =>
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state" +
           ".RocksDBStateStoreProvider")
       import s.implicits._
       val stEnc = implicitly[
         org.apache.spark.sql.Encoder[(Long, Long, java.math.BigDecimal)]]
-      val src = Tables.normalize(
-        s.readStream.schema(schema).option("basePath", dir)
-          .parquet(s"$dir/events*.parquet"))
+      val src = Tables.normalize(fileStream(s, dir, "events"))
       val typed = src.select(col("user_id"), col("event_id"),
           col("value").cast("decimal(18,2)").as("v"))
         .as[(Long, Long, java.math.BigDecimal)]
@@ -271,14 +268,10 @@ object PipelineQueries {
           Iterator.single((key, n, maxId, sum))
         }
       }
-      val q = typed.groupByKey(_._1)
+      val updated = typed.groupByKey(_._1)
         .transformWithState(proc, TimeMode.None(), OutputMode.Update())
         .toDF("user_id", "n_events", "max_event_id", "sum_value")
-        .writeStream.outputMode("update")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-      s.table(name).groupBy("user_id")
+      runToMemory(updated, "update", "stream_tws_sink").groupBy("user_id")
         .agg(max(struct(col("n_events"), col("max_event_id"),
           col("sum_value"))).as("m"))
         .select(col("user_id"), col("m.n_events").as("n_events"),
@@ -301,28 +294,19 @@ object PipelineQueries {
     * redelivery window, e.g. the source's at-least-once retry
     * horizon); the deduped stream must then equal the batch distinct
     * — the memory-sink aggregate is compared to a plain batch
-    * aggregate of `events`. Same gate-only memory-sink caveat as
-    * [[streamWindowCounts]]. */
-  def streamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.readParquet(spark, s"$dir/events.parquet").schema
-    val name = "stream_dedup_sink"
-    onStreamSession(spark, 8) { s =>
-      def src = Tables.normalize(
-        s.readStream.schema(schema).option("basePath", dir)
-          .parquet(s"$dir/events*.parquet"))
+    * aggregate of `events`. */
+  def streamDedup(spark: SparkSession, dir: String): DataFrame =
+    onStreamSession(spark) { s =>
+      def src = Tables.normalize(fileStream(s, dir, "events"))
       val doubled = src.unionByName(src)
         .withWatermark("ts", "365 days")
       val dedup = doubled.dropDuplicatesWithinWatermark("event_id")
-      val q = dedup.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-      s.table(name).groupBy(col("event_type"))
+      runToMemory(dedup, "append", "stream_dedup_sink")
+        .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast("decimal(18,2)")).cast("double")
             .as("sum_value"))
     }
-  }
 
   /** The count-min sketch built ON A STREAM — the live proof of the
     * sketch's mergeable-state claim (`cms_point_estimates` asserts it
@@ -334,27 +318,17 @@ object PipelineQueries {
     * exactly 2x the batch sketch, which the oracle pins. At
     * deployment this is the always-on heavy-hitter monitor: bounded
     * d·w state per aggregation, no watermark needed, snapshot
-    * mergeable with any other site's sketch by cell-wise addition.
-    * Same gate-only memory-sink caveat as [[streamWindowCounts]]. */
-  def streamCms(spark: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.readParquet(spark, s"$dir/events.parquet").schema
-    val name = "stream_cms_sink"
-    onStreamSession(spark, 8) { s =>
-      def src = Tables.normalize(
-        s.readStream.schema(schema).option("basePath", dir)
-          .parquet(s"$dir/events*.parquet"))
+    * mergeable with any other site's sketch by cell-wise addition. */
+  def streamCms(spark: SparkSession, dir: String): DataFrame =
+    onStreamSession(spark) { s =>
+      def src = Tables.normalize(fileStream(s, dir, "events"))
       val doubled = src.unionByName(src).select(col("user_id"))
       val cells = AnalyticsQueries
         .cmsCoords(doubled, col("user_id"), d = 4, w = 256)
         .groupBy(col("seed"), col("bucket"))
         .agg(count(lit(1)).as("n"))
-      val q = cells.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-      s.table(name)
+      runToMemory(cells, "complete", "stream_cms_sink")
     }
-  }
 
   /** Stream-STATIC enrichment join — the remaining cell of the
     * streaming-join matrix next to [[streamStreamJoin]]: the live
@@ -364,28 +338,19 @@ object PipelineQueries {
     * enrichment every event pipeline does; the static side reloads
     * per restart and broadcasts per batch, so no shuffle ever touches
     * the stream. Gate reduces to per-segment counts (order-
-    * independent). Same memory-sink caveat as [[streamWindowCounts]]. */
-  def streamStaticJoin(spark: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.readParquet(spark, s"$dir/events.parquet").schema
-    val name = "stream_static_join_sink"
-    onStreamSession(spark, 8) { s =>
+    * independent). */
+  def streamStaticJoin(spark: SparkSession, dir: String): DataFrame =
+    onStreamSession(spark) { s =>
       val dim = Tables(s, dir, "customer")
         .filter(col("c_custkey") <= 150)
         .select(col("c_custkey"), col("c_mktsegment"))
-      val src = Tables.normalize(
-        s.readStream.schema(schema).option("basePath", dir)
-          .parquet(s"$dir/events*.parquet"))
-      val joined = src.join(broadcast(dim),
-          col("user_id") === col("c_custkey"))
+      val joined = Tables.normalize(fileStream(s, dir, "events"))
+        .join(broadcast(dim), col("user_id") === col("c_custkey"))
         .select(col("event_id"), col("c_mktsegment"))
-      val q = joined.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-      s.table(name).groupBy(col("c_mktsegment"))
+      runToMemory(joined, "append", "stream_static_join_sink")
+        .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n"))
     }
-  }
 
   /** HLL registers built ON A STREAM — the idempotent-merge
     * counterpart of [[streamCms]]: the same doubled events stream
@@ -395,27 +360,17 @@ object PipelineQueries {
     * Together the two gates pin the sketch-merge taxonomy: counting
     * state doubles under at-least-once delivery, max-register state
     * does not — which is why an HLL distinct monitor is safe behind a
-    * replaying source while a CMS counter needs exactly-once.
-    * Same gate-only memory-sink caveat as [[streamWindowCounts]]. */
-  def streamHll(spark: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.readParquet(spark, s"$dir/events.parquet").schema
-    val name = "stream_hll_sink"
-    onStreamSession(spark, 8) { s =>
-      def src = Tables.normalize(
-        s.readStream.schema(schema).option("basePath", dir)
-          .parquet(s"$dir/events*.parquet"))
+    * replaying source while a CMS counter needs exactly-once. */
+  def streamHll(spark: SparkSession, dir: String): DataFrame =
+    onStreamSession(spark) { s =>
+      def src = Tables.normalize(fileStream(s, dir, "events"))
       val doubled = src.unionByName(src)
         .select(col("event_type"), col("user_id"))
       val regs = AnalyticsQueries
         .hllRegisters(doubled, col("event_type"), col("user_id"))
         .withColumnRenamed("g", "event_type")
-      val q = regs.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-      s.table(name)
+      runToMemory(regs, "complete", "stream_hll_sink")
     }
-  }
 
   /** The custom TypedImperativeAggregate ([[graft.functions
     * .HllEstAgg]]) under STREAMING state: doubled stream, complete
@@ -425,26 +380,17 @@ object PipelineQueries {
     * arriving twice (the idempotent-state twin of [[streamHll]],
     * here through the aggregate-function surface instead of the
     * relational register frame). */
-  def streamHllAgg(spark: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.readParquet(spark, s"$dir/events.parquet").schema
-    val name = "stream_hll_agg_sink"
-    onStreamSession(spark, 8) { s =>
-      def src = Tables.normalize(
-        s.readStream.schema(schema).option("basePath", dir)
-          .parquet(s"$dir/events*.parquet"))
+  def streamHllAgg(spark: SparkSession, dir: String): DataFrame =
+    onStreamSession(spark) { s =>
+      def src = Tables.normalize(fileStream(s, dir, "events"))
       val doubled = src.unionByName(src)
         .select(col("event_type"),
           graft.functions.TextFunctions.hash32(
             col("user_id").cast("string")).as("h"))
       val est = doubled.groupBy(col("event_type"))
         .agg(expr("graft_hll_est(h)").as("hll_est"))
-      val q = est.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-      s.table(name)
+      runToMemory(est, "complete", "stream_hll_agg_sink")
     }
-  }
 
   /** Streaming sequence-pattern matching: the doubled stream is
     * first deduplicated on event_id (exact-once semantics restored
@@ -455,13 +401,9 @@ object PipelineQueries {
     * mode. State note as [[streamCorpusPrep]]: unwatermarked
     * dropDuplicates is gate-only; production bounds it with
     * dropDuplicatesWithinWatermark. */
-  def streamEventPattern(spark: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.readParquet(spark, s"$dir/events.parquet").schema
-    val name = "stream_event_pattern_sink"
-    onStreamSession(spark, 8) { s =>
-      def src = Tables.normalize(
-        s.readStream.schema(schema).option("basePath", dir)
-          .parquet(s"$dir/events*.parquet"))
+  def streamEventPattern(spark: SparkSession, dir: String): DataFrame =
+    onStreamSession(spark) { s =>
+      def src = Tables.normalize(fileStream(s, dir, "events"))
       val deduped = src.unionByName(src)
         .filter(col("ts").isNotNull)
         .dropDuplicates("event_id")
@@ -479,13 +421,8 @@ object PipelineQueries {
           length(col("seq")).cast("long").as("seq_len"),
           size(regexp_extract_all(col("seq"), lit("vc*p"), lit(0)))
             .cast("long").as("n_matches"))
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-      s.table(name)
+      runToMemory(agg, "complete", "stream_event_pattern_sink")
     }
-  }
 
   /** Multimodal: binary content column + stub decode via per-partition
     * mapPartitions (real plumbing, fake codec — see Multimodal). */
@@ -504,30 +441,21 @@ object PipelineQueries {
     * `dropDuplicatesWithinWatermark` exactly as [[streamDedup]] shows.
     * The gate aggregate (per-label count + min/max score) is invariant
     * to WHICH member of a digest class survives: identical text means
-    * identical score. Same memory-sink caveat as
-    * [[streamWindowCounts]]. */
-  def streamCorpusPrep(spark: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.readParquet(spark, s"$dir/documents.parquet").schema
-    val name = "stream_corpus_prep_sink"
-    onStreamSession(spark, 8) { s =>
-      val src = s.readStream.schema(schema).option("basePath", dir)
-        .parquet(s"$dir/documents*.parquet")
-      val deduped = src
+    * identical score. */
+  def streamCorpusPrep(spark: SparkSession, dir: String): DataFrame =
+    onStreamSession(spark) { s =>
+      val deduped = fileStream(s, dir, "documents")
         .withColumn("digest", md5(col("text")))
         .dropDuplicates("digest")
       val scored = graft.ext.Scoring.scoreDocuments(deduped,
         col("doc_id"), col("text"),
         newScorer = () => new graft.ext.Scoring.HashedLinearScorer())
-      val q = scored.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-      s.table(name).groupBy(col("label"))
+      runToMemory(scored.toDF(), "append", "stream_corpus_prep_sink")
+        .groupBy(col("label"))
         .agg(count(lit(1)).as("n"),
           min(col("score")).as("min_score"),
           max(col("score")).as("max_score"))
     }
-  }
 
   /** Multimodal exact dedup — content-hash dedup on the BINARY column
     * (the image/audio twin of `dedup_exact`): md5 of the raw payload
@@ -568,27 +496,18 @@ object PipelineQueries {
     * append mode with no watermark), memory sink run to completion.
     * The gate aggregate uses only order-INDEPENDENT reductions
     * (count, min, max) because micro-batch arrival order is not
-    * deterministic and double sums would drift in the last ulp.
-    * Same gate-only memory-sink caveat as [[streamWindowCounts]]. */
-  def streamModelScore(spark: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.readParquet(spark, s"$dir/documents.parquet").schema
-    val name = "stream_model_score_sink"
-    onStreamSession(spark, 8) { s =>
-      val src = s.readStream.schema(schema).option("basePath", dir)
-        .parquet(s"$dir/documents*.parquet")
-      val scored = graft.ext.Scoring.scoreDocuments(src,
-        col("doc_id"), col("text"),
+    * deterministic and double sums would drift in the last ulp. */
+  def streamModelScore(spark: SparkSession, dir: String): DataFrame =
+    onStreamSession(spark) { s =>
+      val scored = graft.ext.Scoring.scoreDocuments(
+        fileStream(s, dir, "documents"), col("doc_id"), col("text"),
         newScorer = () => new graft.ext.Scoring.HashedLinearScorer())
-      val q = scored.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-      s.table(name).groupBy(col("label"))
+      runToMemory(scored.toDF(), "append", "stream_model_score_sink")
+        .groupBy(col("label"))
         .agg(count(lit(1)).as("n"),
           min(col("score")).as("min_score"),
           max(col("score")).as("max_score"))
     }
-  }
 
   /** Streaming read THROUGH the custom DSv2 source
     * ([[graft.sources.ShardSource]]'s MicroBatchStream path): shards
@@ -597,23 +516,16 @@ object PipelineQueries {
     * accumulates across the 4 batches, and the final table must
     * equal the batch oracle regenerated from `range()` — streaming
     * ingestion through a custom source is exactly-once to the gate's
-    * hash. Same gate-only memory-sink caveat as
-    * [[streamWindowCounts]]. */
-  def streamDsv2Source(spark: SparkSession, dir: String): DataFrame = {
-    val name = "stream_dsv2_sink"
-    onStreamSession(spark, 8) { s =>
+    * hash. */
+  def streamDsv2Source(spark: SparkSession, dir: String): DataFrame =
+    onStreamSession(spark) { s =>
       val src = s.readStream.format("graft.sources.ShardSource")
         .option("shards", "8").option("rowsPerShard", "1000")
         .option("shardsPerTrigger", "2").load()
       val counts = src.groupBy(col("key"))
         .agg(count(lit(1)).as("n"), sum(col("val")).as("sum_val"))
-      val q = counts.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-      s.table(name)
+      runToMemory(counts, "complete", "stream_dsv2_sink")
     }
-  }
 
   /** Streaming materialized-summary maintenance
     * ([[graft.pipeline.MvMaintenance]]): each micro-batch's PARTIAL
@@ -624,21 +536,12 @@ object PipelineQueries {
     * `MvMaintenanceSpec` additionally proves multi-batch folding and
     * replay no-ops with manual splits. */
   def streamMvMaintenance(spark: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.readParquet(spark, s"$dir/events.parquet").schema
     val tmp = graft.Tables.scratchDir("graft_mv_maint")
-    onStreamSession(spark, 8) { s =>
-      val src = Tables.normalize(
-        s.readStream.schema(schema).option("basePath", dir)
-          .parquet(s"$dir/events*.parquet"))
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          graft.pipeline.MvMaintenance.mergeBatch(s, tmp, batch, id)
-          ()
-        }
-        .option("checkpointLocation", s"$tmp/_ck")
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    onStreamSession(spark) { s =>
+      runBatches(Tables.normalize(fileStream(s, dir, "events")),
+          s"$tmp/_ck") { (batch, id) =>
+        graft.pipeline.MvMaintenance.mergeBatch(s, tmp, batch, id)
+      }
       graft.pipeline.MvMaintenance.readSummary(s, tmp)
     }
   }
@@ -664,20 +567,21 @@ object PipelineQueries {
       .select(col("doc_id"), col("text"))
     val tmp = graft.Tables.scratchDir("graft_inc_stream")
     val history = docs.filter(pmod(col("doc_id"), lit(4)).isin(1, 2))
-    history.write.mode("overwrite").parquet(s"$tmp/corpus")
+    val corpus = Tables.writeParquet(history, s"$tmp/corpus").schema
     // the standing band index is a PER-DOC function of the corpus:
     // the shared minhash3 tier's full-corpus band rows (same n = 3
     // grams, 16 hashes, 4 rows/band) filtered to the history band are
     // byte-identical to re-shingling and re-hashing history alone
-    ExtQueries.minhash3Frames(spark, dir)("bands")
-      .join(history.select(col("doc_id").as("id")), Seq("id"),
-        "left_semi")
-      .write.mode("overwrite").parquet(s"$tmp/band_index")
-    history
-      .select(TextFunctions.canonicalFingerprint(col("text")).as("fp"))
-      .distinct()
-      .write.mode("overwrite").parquet(s"$tmp/fp_ledger")
-    onStreamSession(spark, 8) { s =>
+    val bandIndex = Tables.writeParquet(
+      ExtQueries.minhash3Frames(spark, dir)("bands")
+        .join(history.select(col("doc_id").as("id")), Seq("id"),
+          "left_semi"),
+      s"$tmp/band_index").schema
+    val fpLedger = Tables.writeParquet(history
+        .select(TextFunctions.canonicalFingerprint(col("text")).as("fp"))
+        .distinct(),
+      s"$tmp/fp_ledger").schema
+    onStreamSession(spark) { s =>
       // FILE-ARRIVAL feed: each wave is written as parquet files into
       // the watched directory (a distributed write — no rows through
       // the driver), and the file source's new-file discovery forms
@@ -687,36 +591,27 @@ object PipelineQueries {
         .filter(pmod(col("doc_id"), lit(4)) === m)
         .write.mode("append").parquet(s"$tmp/in")
       writeWave(0)
-      val q = s.readStream
-        .schema("doc_id LONG, text STRING")
-        .parquet(s"$tmp/in")
-        .writeStream
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          val (kept, delta) = Dedup.incrementalLshDedup(b,
-            col("doc_id"), col("text"),
-            s.read.parquet(s"$tmp/band_index"),
-            s.read.parquet(s"$tmp/corpus"),
-            col("doc_id"), col("text"),
-            s.read.parquet(s"$tmp/fp_ledger"))
-          val keptM = b.join(kept.withColumnRenamed("id", "doc_id"),
-            Seq("doc_id"), "left_semi").localCheckpoint(true)
-          val deltaM = delta.localCheckpoint(true)
-          keptM.select(col("doc_id"), lit(id + 1).as("stage"))
-            .write.mode("append").parquet(s"$tmp/kept")
-          keptM.write.mode("append").parquet(s"$tmp/corpus")
-          deltaM.write.mode("append").parquet(s"$tmp/band_index")
-          keptM.select(TextFunctions.canonicalFingerprint(col("text"))
-              .as("fp")).distinct()
-            .write.mode("append").parquet(s"$tmp/fp_ledger")
-          ()
-        }
-        .option("checkpointLocation", s"$tmp/_ck")
-        .start()
-      q.processAllAvailable()
-      writeWave(3)
-      q.processAllAvailable()
-      q.stop()
-      s.read.parquet(s"$tmp/kept")
+      runBatches(s.readStream.schema("doc_id LONG, text STRING")
+          .parquet(s"$tmp/in"), s"$tmp/_ck",
+          Seq(() => writeWave(3))) { (b, id) =>
+        val (kept, delta) = Dedup.incrementalLshDedup(b,
+          col("doc_id"), col("text"),
+          s.read.schema(bandIndex).parquet(s"$tmp/band_index"),
+          s.read.schema(corpus).parquet(s"$tmp/corpus"),
+          col("doc_id"), col("text"),
+          s.read.schema(fpLedger).parquet(s"$tmp/fp_ledger"))
+        val keptM = b.join(kept.withColumnRenamed("id", "doc_id"),
+          Seq("doc_id"), "left_semi").localCheckpoint(true)
+        val deltaM = delta.localCheckpoint(true)
+        keptM.select(col("doc_id"), lit(id + 1).as("stage"))
+          .write.mode("append").parquet(s"$tmp/kept")
+        keptM.write.mode("append").parquet(s"$tmp/corpus")
+        deltaM.write.mode("append").parquet(s"$tmp/band_index")
+        keptM.select(TextFunctions.canonicalFingerprint(col("text"))
+            .as("fp")).distinct()
+          .write.mode("append").parquet(s"$tmp/fp_ledger")
+      }
+      s.read.schema("doc_id LONG, stage LONG").parquet(s"$tmp/kept")
     }
   }
 
@@ -740,40 +635,32 @@ object PipelineQueries {
     val tmp = graft.Tables.scratchDir("graft_ann_stream")
     // seed-cell "training": centroids = the 16 smallest-id vectors,
     // matching the ivfAssign oracle; assignments from those centroids
-    emb.orderBy(col("vec_id").asc).limit(16)
-      .select(col("vec_id").as("cell_id"),
-        posexplode(col("embedding")).as(Seq("i", "cx")))
-      .select(col("cell_id"), col("i"), col("cx").cast("double").as("cx"))
-      .write.mode("overwrite").parquet(s"$tmp/centroids")
-    Similarity.cellAssignmentsFor(emb, col("vec_id"), col("embedding"),
-        spark.read.parquet(s"$tmp/centroids"))
-      .write.mode("overwrite").parquet(s"$tmp/assignments")
-    onStreamSession(spark, 8) { s =>
+    val centroids = Tables.writeParquet(emb.orderBy(col("vec_id").asc)
+        .limit(16)
+        .select(col("vec_id").as("cell_id"),
+          posexplode(col("embedding")).as(Seq("i", "cx")))
+        .select(col("cell_id"), col("i"), col("cx").cast("double").as("cx")),
+      s"$tmp/centroids")
+    val assignments = Tables.writeParquet(
+      Similarity.cellAssignmentsFor(emb, col("vec_id"), col("embedding"),
+        centroids),
+      s"$tmp/assignments")
+    onStreamSession(spark) { s =>
       def writeWave(lo: Long, hi: Long): Unit = emb
         .filter(col("vec_id") >= lo && col("vec_id") < hi)
         .select(col("vec_id"), col("embedding"))
         .write.mode("append").parquet(s"$tmp/in")
       writeWave(0, 5)
-      val q = s.readStream
-        .schema("vec_id LONG, embedding ARRAY<FLOAT>")
-        .parquet(s"$tmp/in")
-        .writeStream
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          Similarity.ivfTopKFromIndex(emb, col("vec_id"),
-              col("embedding"), b, col("vec_id"), col("embedding"),
-              k = 10, nProbe = 4,
-              s.read.parquet(s"$tmp/centroids"),
-              s.read.parquet(s"$tmp/assignments"))
-            .write.mode("append").parquet(s"$tmp/results")
-          ()
-        }
-        .option("checkpointLocation", s"$tmp/_ck")
-        .start()
-      q.processAllAvailable()
-      writeWave(5, 10)
-      q.processAllAvailable()
-      q.stop()
-      s.read.parquet(s"$tmp/results")
+      runBatches(s.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
+          .parquet(s"$tmp/in"), s"$tmp/_ck",
+          Seq(() => writeWave(5, 10))) { (b, _) =>
+        Similarity.ivfTopKFromIndex(emb, col("vec_id"),
+            col("embedding"), b, col("vec_id"), col("embedding"),
+            k = 10, nProbe = 4, centroids, assignments)
+          .write.mode("append").parquet(s"$tmp/results")
+      }
+      s.read.schema("query_id LONG, nbr_id LONG, rank INT, cosine DOUBLE")
+        .parquet(s"$tmp/results")
     }
   }
 
@@ -852,90 +739,81 @@ object PipelineQueries {
     val emb = Tables(spark, dir, "embeddings")
     val standing = emb.filter(pmod(col("vec_id"), lit(10)) =!= 9)
       .select(col("vec_id"), col("embedding"))
-    standing.write.mode("overwrite").parquet(s"$tmp/corpus")
+    val corpusSchema = Tables.writeParquet(standing, s"$tmp/corpus").schema
     // the standing store is the shared graph_append tier's banded
     // diversified base — read the persisted frame
-    ExtQueries.graphAppendBaseGraph(spark, dir)
-      .write.mode("overwrite").parquet(s"$tmp/graph")
-    onStreamSession(spark, 8) { s =>
-      waves.head.write.mode("append").parquet(s"$tmp/in")
-      val q = s.readStream
-        .schema("op STRING, vec_id LONG, embedding ARRAY<FLOAT>")
-        .parquet(s"$tmp/in")
-        .writeStream
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          val corpus = s.read.parquet(s"$tmp/corpus")
-          val graph = s.read.parquet(s"$tmp/graph")
-          val adds = b.filter(col("op") === "add")
-            .select(col("vec_id"), col("embedding"))
-          val dels = b.filter(col("op") === "del").select(col("vec_id"))
-          // ONE driver action decides both branches (was two
-          // limit(1).count() jobs per tick)
-          val opCnt = b.agg(
-            sum(when(col("op") === "add", 1L).otherwise(0L)).as("na"),
-            sum(when(col("op") === "del", 1L).otherwise(0L)).as("nd"))
-            .collect()(0)
-          val hasAdds = !opCnt.isNullAt(0) && opCnt.getLong(0) > 0
-          val hasDels = !opCnt.isNullAt(1) && opCnt.getLong(1) > 0
-          var curC = corpus
-          var curG = graph
-          if (hasAdds) {
-            val delta = Similarity.graphAppend(curC, col("vec_id"),
-              col("embedding"), curG, adds, col("vec_id"),
-              col("embedding"), k = 8, beam = 16, hops = 3,
-              entries = 8)
-            val touched = delta.filter(col("src") === "updated")
-              .select(col("node_id")).distinct()
-            curG = delta.filter(col("src") =!= "dropped")
+    val graphSchema = Tables.writeParquet(
+      ExtQueries.graphAppendBaseGraph(spark, dir), s"$tmp/graph").schema
+    onStreamSession(spark) { s =>
+      def land(w: DataFrame): Unit = w.write.mode("append").parquet(s"$tmp/in")
+      land(waves.head)
+      runBatches(s.readStream
+          .schema("op STRING, vec_id LONG, embedding ARRAY<FLOAT>")
+          .parquet(s"$tmp/in"), s"$tmp/_ck",
+          waves.tail.map(w => () => land(w))) { (b, _) =>
+        val corpus = s.read.schema(corpusSchema).parquet(s"$tmp/corpus")
+        val graph = s.read.schema(graphSchema).parquet(s"$tmp/graph")
+        val adds = b.filter(col("op") === "add")
+          .select(col("vec_id"), col("embedding"))
+        val dels = b.filter(col("op") === "del").select(col("vec_id"))
+        // ONE driver action decides both branches (was two
+        // limit(1).count() jobs per tick)
+        val opCnt = b.agg(
+          sum(when(col("op") === "add", 1L).otherwise(0L)).as("na"),
+          sum(when(col("op") === "del", 1L).otherwise(0L)).as("nd"))
+          .collect()(0)
+        val hasAdds = !opCnt.isNullAt(0) && opCnt.getLong(0) > 0
+        val hasDels = !opCnt.isNullAt(1) && opCnt.getLong(1) > 0
+        var curC = corpus
+        var curG = graph
+        if (hasAdds) {
+          val delta = Similarity.graphAppend(curC, col("vec_id"),
+            col("embedding"), curG, adds, col("vec_id"),
+            col("embedding"), k = 8, beam = 16, hops = 3,
+            entries = 8)
+          val touched = delta.filter(col("src") === "updated")
+            .select(col("node_id")).distinct()
+          curG = delta.filter(col("src") =!= "dropped")
+            .select(col("node_id"), col("nbr_id"), col("rank"),
+              col("cosine"))
+            .unionByName(curG
+              .join(touched, Seq("node_id"), "left_anti")
               .select(col("node_id"), col("nbr_id"), col("rank"),
-                col("cosine"))
-              .unionByName(curG
-                .join(touched, Seq("node_id"), "left_anti")
-                .select(col("node_id"), col("nbr_id"), col("rank"),
-                  col("cosine")))
-            curC = curC.unionByName(adds)
-            // MIXED tick: the delete stage walks its graph relation
-            // ~10x — composing it over the un-truncated append plan
-            // re-nests the whole lineage per reference (heap-OOM at
-            // spec scale). Truncate between the ops of one tick.
-            if (hasDels) {
-              curG = curG.localCheckpoint(true)
-              curC = curC.localCheckpoint(true)
-            }
-          }
+                col("cosine")))
+          curC = curC.unionByName(adds)
+          // MIXED tick: the delete stage walks its graph relation
+          // ~10x — composing it over the un-truncated append plan
+          // re-nests the whole lineage per reference (heap-OOM at
+          // spec scale). Truncate between the ops of one tick.
           if (hasDels) {
-            curC = curC.join(dels, Seq("vec_id"), "left_anti")
-            val rep = Similarity.graphDelete(curC, col("vec_id"),
-              col("embedding"), curG, dels, col("vec_id"), k = 8)
-            val keep = curG.join(dels
-                .select(col("vec_id").as("node_id")),
-              Seq("node_id"), "left_anti")
-            val touched = keep.join(dels
-                .select(col("vec_id").as("nbr_id")),
-              Seq("nbr_id"), "left_semi")
-              .select(col("node_id")).distinct()
-            curG = keep.join(touched, Seq("node_id"), "left_anti")
-              .select(col("node_id"), col("nbr_id"), col("rank"),
-                col("cosine"))
-              .unionByName(rep.filter(col("src") =!= "dropped")
-                .select(col("node_id"), col("nbr_id"),
-                  col("rank"), col("cosine")))
+            curG = curG.localCheckpoint(true)
+            curC = curC.localCheckpoint(true)
           }
-          val outG = curG.localCheckpoint(true)
-          val outC = curC.localCheckpoint(true)
-          outG.write.mode("overwrite").parquet(s"$tmp/graph")
-          outC.write.mode("overwrite").parquet(s"$tmp/corpus")
-          ()
         }
-        .option("checkpointLocation", s"$tmp/_ck")
-        .start()
-      q.processAllAvailable()
-      waves.tail.foreach { w =>
-        w.write.mode("append").parquet(s"$tmp/in")
-        q.processAllAvailable()
+        if (hasDels) {
+          curC = curC.join(dels, Seq("vec_id"), "left_anti")
+          val rep = Similarity.graphDelete(curC, col("vec_id"),
+            col("embedding"), curG, dels, col("vec_id"), k = 8)
+          val keep = curG.join(dels
+              .select(col("vec_id").as("node_id")),
+            Seq("node_id"), "left_anti")
+          val touched = keep.join(dels
+              .select(col("vec_id").as("nbr_id")),
+            Seq("nbr_id"), "left_semi")
+            .select(col("node_id")).distinct()
+          curG = keep.join(touched, Seq("node_id"), "left_anti")
+            .select(col("node_id"), col("nbr_id"), col("rank"),
+              col("cosine"))
+            .unionByName(rep.filter(col("src") =!= "dropped")
+              .select(col("node_id"), col("nbr_id"),
+                col("rank"), col("cosine")))
+        }
+        val outG = curG.localCheckpoint(true)
+        val outC = curC.localCheckpoint(true)
+        outG.write.mode("overwrite").parquet(s"$tmp/graph")
+        outC.write.mode("overwrite").parquet(s"$tmp/corpus")
       }
-      q.stop()
-      s.read.parquet(s"$tmp/graph")
+      s.read.schema(graphSchema).parquet(s"$tmp/graph")
     }
   }
 
@@ -957,18 +835,18 @@ object PipelineQueries {
       .select(col("c_custkey"),
         col("c_acctbal").cast("decimal(18,2)").as("acctbal"))
     val tmp = graft.Tables.scratchDir("graft_scd_stream")
-    base
-      .withColumn("valid_from", to_date(lit("2024-01-01")))
-      .withColumn("valid_to", lit(null).cast("date"))
-      .withColumn("is_current", lit(true))
-      .write.mode("overwrite").parquet(s"$tmp/hist")
+    val hist = Tables.writeParquet(base
+        .withColumn("valid_from", to_date(lit("2024-01-01")))
+        .withColumn("valid_to", lit(null).cast("date"))
+        .withColumn("is_current", lit(true)),
+      s"$tmp/hist").schema
     val snap1 = base.withColumn("acctbal",
       when(col("c_custkey") % 7 === 0, col("acctbal") + lit(10))
         .otherwise(col("acctbal")))
     val snap2 = snap1.withColumn("acctbal",
       when(col("c_custkey") % 11 === 0, col("acctbal") + lit(5))
         .otherwise(col("acctbal")))
-    onStreamSession(spark, 8) { s =>
+    onStreamSession(spark) { s =>
       // acctbal rides as STRING through the drop folder (the
       // streaming parquet reader rejects the batch writer's
       // FIXED_LEN_BYTE_ARRAY decimal encoding); decimal → string →
@@ -978,27 +856,18 @@ object PipelineQueries {
         .write.mode("append").parquet(s"$tmp/in")
       writeWave(snap1)
       val effective = Map(0L -> "2024-06-01", 1L -> "2024-12-01")
-      val q = s.readStream
-        .schema("c_custkey LONG, acctbal STRING")
-        .parquet(s"$tmp/in")
-        .writeStream
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          val batch = b.select(col("c_custkey"),
-            col("acctbal").cast("decimal(18,2)").as("acctbal"))
-          val merged = LakeQueries.scdType2Merge(
-              s.read.parquet(s"$tmp/hist"), batch, "c_custkey",
-              Seq("acctbal"), to_date(lit(effective(id))))
-            .localCheckpoint(true)
-          merged.write.mode("overwrite").parquet(s"$tmp/hist")
-          ()
-        }
-        .option("checkpointLocation", s"$tmp/_ck")
-        .start()
-      q.processAllAvailable()
-      writeWave(snap2)
-      q.processAllAvailable()
-      q.stop()
-      s.read.parquet(s"$tmp/hist")
+      runBatches(s.readStream.schema("c_custkey LONG, acctbal STRING")
+          .parquet(s"$tmp/in"), s"$tmp/_ck",
+          Seq(() => writeWave(snap2))) { (b, id) =>
+        val batch = b.select(col("c_custkey"),
+          col("acctbal").cast("decimal(18,2)").as("acctbal"))
+        val merged = LakeQueries.scdType2Merge(
+            s.read.schema(hist).parquet(s"$tmp/hist"), batch, "c_custkey",
+            Seq("acctbal"), to_date(lit(effective(id))))
+          .localCheckpoint(true)
+        merged.write.mode("overwrite").parquet(s"$tmp/hist")
+      }
+      s.read.schema(hist).parquet(s"$tmp/hist")
         .select(col("c_custkey"),
           col("acctbal").cast("double").as("acctbal"),
           date_format(col("valid_from"), "yyyy-MM-dd").as("valid_from"),
@@ -1026,18 +895,19 @@ object PipelineQueries {
       .select(col("user_id"), unix_timestamp(col("ts")).as("ts_s"),
         col("event_id"), col("event_type"))
     val maxTs = ev.agg(max(col("ts_s"))).collect()(0).getLong(0)
-    val name = "stream_outer_join_sink"
     val tmp = graft.Tables.scratchDir("graft_oj_stream")
-    onStreamSession(spark, 8) { s =>
+    onStreamSession(spark) { s =>
       def writeWave(folder: String, t: String): Unit = ev
         .filter(col("event_type") === t)
         .select(col("user_id"), col("ts_s"), col("event_id"))
         .write.mode("append").parquet(s"$tmp/$folder")
-      def writeSentinel(folder: String, user: Long, tsS: Long,
-          id: Long): Unit = s.range(1)
-        .select(lit(user).as("user_id"), lit(tsS).as("ts_s"),
-          lit(id).as("event_id"))
-        .write.mode("append").parquet(s"$tmp/$folder")
+      // one sentinel row into each folder, a never-matching user each
+      def sentinels(tsS: Long, pId: Long, cId: Long): Unit =
+        Seq(("p", -1L, pId), ("c", -2L, cId)).foreach { case (f, user, id) =>
+          s.range(1).select(lit(user).as("user_id"), lit(tsS).as("ts_s"),
+              lit(id).as("event_id"))
+            .write.mode("append").parquet(s"$tmp/$f")
+        }
       def src(folder: String) = s.readStream
         .schema("user_id LONG, ts_s LONG, event_id LONG")
         .parquet(s"$tmp/$folder")
@@ -1057,18 +927,10 @@ object PipelineQueries {
         expr("p_user = c_user AND c_ts >= p_ts - INTERVAL 10 MINUTES" +
           " AND c_ts <= p_ts"),
         "left_outer")
-      val q = joined.writeStream.outputMode("append")
-        .option("checkpointLocation", s"$tmp/_ck")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      writeSentinel("p", -1L, maxTs + 864000L, -1L)
-      writeSentinel("c", -2L, maxTs + 864000L, -2L)
-      q.processAllAvailable()
-      writeSentinel("p", -1L, maxTs + 1728000L, -3L)
-      writeSentinel("c", -2L, maxTs + 1728000L, -4L)
-      q.processAllAvailable()
-      q.stop()
-      s.table(name).filter(col("purchase_id") >= 0)
+      runToMemory(joined, "append", "stream_outer_join_sink",
+          Some(s"$tmp/_ck"), Seq(() => sentinels(maxTs + 864000L, -1L, -2L),
+            () => sentinels(maxTs + 1728000L, -3L, -4L)))
+        .filter(col("purchase_id") >= 0)
         .select(col("purchase_id"), col("click_id"),
           col("p_s"), col("c_s"))
     }
@@ -1079,7 +941,7 @@ object PipelineQueries {
     * behind the watermark are dropped from windowed state — made
     * deterministic and hash-checked. File-arrival waves into a
     * watched drop folder (one distributed parquet write per wave, a
-    * processAllAvailable turning each into one micro-batch) fix the
+    * drain turning each into one micro-batch) fix the
     * batch boundaries: batch 1 is the on-time bulk
     * (event_id ≢ 0 mod 4), batch 2 the stragglers (≡ 0 — spanning
     * the whole time range, so some fall behind the watermark batch 1
@@ -1097,13 +959,11 @@ object PipelineQueries {
     val b1 = ev.filter(col("event_id") % 4 =!= 0)
     val b2 = ev.filter(col("event_id") % 4 === 0)
     val maxTs = ev.agg(max(col("ts_s"))).collect()(0).getLong(0)
-    val name = "stream_late_data_sink"
     val tmp = graft.Tables.scratchDir("graft_late_stream")
-    onStreamSession(spark, 8) { s =>
+    onStreamSession(spark) { s =>
       // FILE-ARRIVAL waves: on-time bulk, stragglers, then the two
       // sentinel files — distributed writes, no rows through the
-      // driver; each processAllAvailable turns one write into one
-      // micro-batch
+      // driver; each drain turns one write into one micro-batch
       def writeWave(df: DataFrame): Unit = df.select(col("ts_s"))
         .write.mode("append").parquet(s"$tmp/in")
       writeWave(b1)
@@ -1112,24 +972,18 @@ object PipelineQueries {
         .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "5 minutes"))
         .agg(count(lit(1)).as("n"))
-      val q = agg.writeStream.outputMode("append")
-        .option("checkpointLocation", s"$tmp/_ck")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      writeWave(b2)
-      q.processAllAvailable()
+      def sentinel(tsS: Long): Unit =
+        writeWave(s.range(1).select(lit(tsS).as("ts_s")))
       // sentinel pair: batch 3 lifts the watermark past every real
       // window; batch 4 makes batch 3's watermark take effect so the
       // eviction happens inside a data batch
-      writeWave(s.range(1).select(lit(maxTs + 864000L).as("ts_s")))
-      q.processAllAvailable()
-      writeWave(s.range(1).select(lit(maxTs + 1728000L).as("ts_s")))
-      q.processAllAvailable()
-      q.stop()
+      val sink = runToMemory(agg, "append", "stream_late_data_sink",
+        Some(s"$tmp/_ck"), Seq(() => writeWave(b2),
+          () => sentinel(maxTs + 864000L), () => sentinel(maxTs + 1728000L)))
       // sentinel windows may or may not have been flushed by a
       // trailing no-data micro-batch before stop — excluding them by
       // time range makes the gate independent of that race
-      s.table(name).select(
+      sink.select(
           unix_timestamp(col("window.start")).as("window_start"),
           col("n"))
         .filter(col("window_start") <= maxTs)
@@ -1145,12 +999,9 @@ object PipelineQueries {
     * stream-static CROSS join of the 1-row frame is what it would
     * replace. Distinct aggregates are unsupported on streams, so the
     * gate surfaces (lang, n_bigrams, q_sum) and derives mean_p
-    * batch-side from the sink table. Same gate-only memory-sink
-    * caveat as [[streamWindowCounts]]. */
-  def streamLmScore(spark: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.readParquet(spark, s"$dir/documents.parquet").schema
-    val name = "stream_lm_score_sink"
-    onStreamSession(spark, 8) { s =>
+    * batch-side from the sink table. */
+  def streamLmScore(spark: SparkSession, dir: String): DataFrame =
+    onStreamSession(spark) { s =>
       val docs = graft.Tables(s, dir, "documents")
       val big = graft.ext.Lm.seqBigrams(docs, col("doc_id"), col("text"))
       // static model frames are re-executed per micro-batch by the
@@ -1159,24 +1010,19 @@ object PipelineQueries {
       val c1 = graft.Tables.materialize(graft.ext.Lm.contextCounts(c12))
       val v = graft.ext.Lm.vocabSize(docs, col("text"))
         .collect()(0).getLong(0)
-      val src = s.readStream.schema(schema).option("basePath", dir)
-        .parquet(s"$dir/documents*.parquet")
       val scored = graft.ext.Lm
-        .seqBigrams(src, col("doc_id"), col("text"), carry = Seq("lang"))
+        .seqBigrams(fileStream(s, dir, "documents"), col("doc_id"),
+          col("text"), carry = Seq("lang"))
         .join(c12, Seq("w1", "w2"), "left_outer")
         .join(c1, Seq("w1"), "left_outer")
         .withColumn("q", expr(
           s"((coalesce(c12, 0L) + 1L) * 1048576L) div (coalesce(c1, 0L) + ${v}L)"))
       val agg = scored.groupBy(col("lang"))
         .agg(count(lit(1)).as("n_bigrams"), sum(col("q")).as("q_sum"))
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-      s.table(name).withColumn("mean_p", col("q_sum").cast("double") /
-        (col("n_bigrams") * lit(1048576L)).cast("double"))
+      runToMemory(agg, "complete", "stream_lm_score_sink")
+        .withColumn("mean_p", col("q_sum").cast("double") /
+          (col("n_bigrams") * lit(1048576L)).cast("double"))
     }
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stream_lm_score" -> streamLmScore _,

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Persist-once shared-frame tier for gate queries.
@@ -62,10 +62,9 @@ private[graft] object SharedFrames {
     * seq of frame name → definition), persists every frame to one
     * scratch dir, and returns the read-back handles; later callers
     * read the persisted parquet by the recorded names and schemas. A
-    * frame's recorded schema is the one it was written with, every
-    * field nullable: what inference gives a scan of the written files,
-    * since Spark stores the written schema in the footer and a file
-    * scan reads every field as nullable. The write goes through
+    * frame's recorded schema is the one [[graft.Tables.writeParquet]]
+    * reads it back with: what inference gives a scan of the written
+    * files. The write goes through
     * repartition(1) — NOT coalesce(1), which would collapse the whole
     * upstream computation into one task; the shuffle boundary keeps
     * the build parallel while only the (small) result funnels to one
@@ -81,13 +80,11 @@ private[graft] object SharedFrames {
     val key = spark.sparkContext.applicationId + "|" + dir + "|" + name
     val (path, names) = built.computeIfAbsent(key, _ => {
       val p = graft.Tables.scratchDir(s"graft_shared_$name")
-      val frames = build
-      frames.foreach { case (n, df) =>
-        df.repartition(1).write.mode("overwrite").parquet(s"$p/$n")
+      val schemas = build.map { case (n, df) =>
+        n -> graft.Tables.writeParquet(df.repartition(1), s"$p/$n").schema
       }
       buildLog.add(name)
-      (p, frames.map { case (n, df) =>
-        n -> GraftSqlBridge.asNullable(df.schema) })
+      (p, schemas)
     })
     names.map { case (n, schema) =>
       n -> spark.read.schema(schema).parquet(s"$path/$n")

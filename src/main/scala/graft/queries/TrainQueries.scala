@@ -491,16 +491,17 @@ object TrainQueries {
     val standing = docs.filter(col("doc_id") % 3 =!= 0)
     val incoming = docs.filter(col("doc_id") % 3 === 0)
     val tmp = graft.Tables.scratchDir("graft_lm_model")
-    Lm.bigramCounts(Lm.seqBigrams(standing, col("doc_id"), col("text")))
-      .write.mode("overwrite").parquet(s"$tmp/bigrams")
-    Lm.tokenCounts(standing, col("text"))
-      .write.mode("overwrite").parquet(s"$tmp/vocab")
+    val bigrams = Tables.writeParquet(
+      Lm.bigramCounts(Lm.seqBigrams(standing, col("doc_id"), col("text"))),
+      s"$tmp/bigrams")
+    val tokens = Tables.writeParquet(Lm.tokenCounts(standing, col("text")),
+      s"$tmp/vocab")
     val incBig = graft.Tables.materialize(
       Lm.seqBigrams(incoming, col("doc_id"), col("text"),
         carry = Seq("lang")))
-    val c12 = Lm.mergeCounts(spark.read.parquet(s"$tmp/bigrams"),
+    val c12 = Lm.mergeCounts(bigrams,
       Lm.bigramCounts(incBig), Seq("w1", "w2"), "c12")
-    val vocab = Lm.mergeCounts(spark.read.parquet(s"$tmp/vocab"),
+    val vocab = Lm.mergeCounts(tokens,
       Lm.tokenCounts(incoming, col("text")), Seq("tok"), "n")
     val v = vocab.agg(count(lit(1)).as("v"))
     Lm.scoreBigrams(incBig, c12, Lm.contextCounts(c12), v)

@@ -7,11 +7,11 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import graft.pipeline.BatchPipeline
 import graft.queries.SharedFrames
 
-/** Schema-carrying reads: a shared tier's read-back takes the schema
-  * its build wrote and a base table's load takes the schema of the
-  * footer it reads, so neither runs the one-task schema-inference job
-  * a plain `spark.read.parquet` runs — and that schema is the one
-  * inference would give. */
+/** Schema-carrying reads: a shared tier's or a gate store's read-back
+  * takes the schema its build wrote and a base table's load takes the
+  * schema of the footer it reads, so none runs the one-task
+  * schema-inference job a plain `spark.read.parquet` runs — and that
+  * schema is the one inference would give. */
 class TierReadSpec extends SparkSpec {
   import spark.implicits._
 
@@ -47,6 +47,27 @@ class TierReadSpec extends SparkSpec {
       assert(df.schema ==
         Tables.normalize(spark.read.parquet(s"$dir/$t.parquet")).schema, t)
     }
+  }
+
+  test("a store written through Tables.writeParquet costs only its write " +
+      "job and reads back with the schema inference gives") {
+    import org.apache.spark.sql.functions.col
+    val tmp = Files.createTempDirectory("graft_store")
+    // the column types the gate-local stores carry (ids, ranks, cosines,
+    // text, vectors, SCD history money/dates/flags); primitive columns
+    // of a local Seq are non-nullable, the read-back's are not
+    val df = Seq(
+        (1L, 2, 0.5, Option("a"), Array(1.5f, 2.5f), "12.34",
+          Option(java.sql.Date.valueOf("2024-06-01")), true),
+        (2L, 3, -1.0, None, Array.empty[Float], "-0.01", None, false))
+      .toDF("id", "rank", "cosine", "text", "embedding", "acctbal",
+        "valid_to", "is_current")
+      .withColumn("acctbal", col("acctbal").cast("decimal(18,2)"))
+    val (back, jobs, _) = withJobsAndTasks(
+      Tables.writeParquet(df, s"$tmp/store"))
+    assert(jobs == 1)
+    assert(back.schema == spark.read.parquet(s"$tmp/store").schema)
+    assert(back.orderBy("id").collect().toSeq == df.collect().toSeq)
   }
 
   test("a directory-form table and a directory with a summary file fall " +

@@ -91,6 +91,7 @@ def main(sf_dir: str, out_dir: str) -> int:
             failures += 1
         else:
             print(f"ok   {name}: {len(got_c)} rows")
+    print(f"{len(oracle) - failures}/{len(oracle)} ok")
     return failures
 
 
