@@ -169,42 +169,25 @@ object Bench {
     // duplicate task attempts are safe here (the posting sink path
     // is NOT benched with a real poster).
     //
-    // Round 19 (the 32-core efficiency diagnosis): the r18 settings
-    // (interval 1 s, quantile 0.75, multiplier 4, no runtime floor)
-    // speculated ORDINARY sub-second tasks once 32 slots made a
-    // 4x-median outlier common. Measured A/B on the 10-gate heavy
-    // subset at local[32], identical binary: tempering saves 4-9%
-    // task time on the shuffle-heavy gates (stream_graph_append
-    // 96.9→87.9 task-s, stream_incremental_dedup 126.0→115.2,
-    // embed_dbscan 178.4→165.3) and ~0 on CPU-bound ones — real but
-    // NOT the 32-core collapse cause (see the partition-sizing notes
-    // below). minTaskRuntime keeps speculation armed strictly for the
-    // wedge it was added for (tasks that normally finish in ms
-    // running 20 s+), and the 45 s watchdog kill below stays as the
-    // backstop. Env-overridable for A/B diagnosis.
-    val specMinRuntime =
-      sys.env.getOrElse("SPARK_GRAFT_SPEC_MIN_RUNTIME", "20s")
+    // Round 19 (the 32-core efficiency diagnosis, OPTIMIZATION_r19.md
+    // §1): the r18 settings (interval 1 s, quantile 0.75, multiplier
+    // 4, no runtime floor) speculated ORDINARY sub-second tasks once
+    // 32 slots made a 4x-median outlier common. Measured A/B on the
+    // 10-gate heavy subset at local[32], identical binary: tempering
+    // saves 4-9% task time on the shuffle-heavy gates
+    // (stream_graph_append 96.9→87.9 task-s, stream_incremental_dedup
+    // 126.0→115.2, embed_dbscan 178.4→165.3) and ~0 on CPU-bound ones.
+    // minTaskRuntime keeps speculation armed strictly for the wedge it
+    // was added for (tasks that normally finish in ms running 20 s+),
+    // and the 45 s watchdog kill below stays as the backstop. Partition
+    // sizing is the engine's own (`Sessions.builder`).
     val spark = Sessions.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.speculation",
-        sys.env.getOrElse("SPARK_GRAFT_SPECULATION", "true"))
-      .config("spark.speculation.interval",
-        sys.env.getOrElse("SPARK_GRAFT_SPEC_INTERVAL", "2s"))
+      .config("spark.speculation", "true")
+      .config("spark.speculation.interval", "2s")
       .config("spark.speculation.multiplier", "4")
       .config("spark.speculation.quantile", "0.75")
-      .config("spark.speculation.minTaskRuntime", specMinRuntime)
+      .config("spark.speculation.minTaskRuntime", "20s")
       .config("spark.speculation.task.duration.threshold", "30s")
-      // Diagnosis knobs for the 32-core efficiency question (r18
-      // verdict item 1): override the engine's partition sizing to
-      // attribute the c32-vs-c8 CPU gap between "too many tiny
-      // partitions" and memory-bandwidth contention. Defaults are
-      // the engine's own settings — the driver's bench is unchanged.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST",
-          Sessions.AqeParallelismFirst))
-      .config("spark.default.parallelism",
-        sys.env.getOrElse("SPARK_GRAFT_DEFAULT_PARALLELISM", cpus))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Sessions.warm(spark)

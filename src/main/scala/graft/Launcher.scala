@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StructType
 
 import graft.config.{ConfigLoader, SourceConfig}
 import graft.pipeline.{BatchPipeline, StreamingPipeline}
@@ -17,7 +19,11 @@ import graft.sink.{EventPoster, PostResult}
   *                                      mains)
   *   --input_subscription S            (streaming: watch directory — the
   *                                      file stream source subsumes the
-  *                                      Pub/Sub notification feed, S1)
+  *                                      Pub/Sub notification feed, S1;
+  *                                      a config's stream reads every
+  *                                      file whose path starts with its
+  *                                      source prefix, at any depth, as
+  *                                      a flat GCS prefix matches)
   *   --input_gcs_pattern P             (batch: glob of input objects)
   *   --source_configs_gcs_uri U        (required; validated + loaded
   *                                      before anything launches)
@@ -151,12 +157,12 @@ object Launcher {
           case "batch" =>
             val pattern = a.inputGcsPattern.getOrElse(
               sys.error("--input_gcs_pattern is required in batch mode"))
-            val fs = new org.apache.hadoop.fs.Path(pattern)
+            val fs = new Path(pattern)
               .getFileSystem(spark.sparkContext.hadoopConfiguration)
             // local paths come back "file:/..."-schemed from the glob;
             // strip that so they prefix-match plain-path configs (cloud
             // schemes like gs:// stay verbatim, as their configs are)
-            val globbed = fs.globStatus(new org.apache.hadoop.fs.Path(pattern))
+            val globbed = fs.globStatus(new Path(pattern))
               .toSeq.map { st =>
                 val u = st.getPath.toUri
                 if (u.getScheme == null || u.getScheme == "file") u.getPath
@@ -204,21 +210,21 @@ object Launcher {
     * configs' rows.
     * Returns the started queries; [[main]] awaits them. `poster`
     * overrides the transport (specs inject a counting poster).
-    * `schema` skips input-schema inference when the caller already
-    * knows it — inference batch-reads the watch dir, which at 10^6
-    * files is a full extra directory listing before the N stream
-    * sources each list their prefix; a production launch should pass
-    * the declared schema. `triggerInterval` is each stream's
-    * micro-batch trigger ([[StreamingPipeline.sinkStream]]'s). */
+    * `schema` is the input schema; without it, [[watchSchema]] takes it
+    * from one footer, which at 10^6 files still costs a full extra
+    * listing of the watch dir before the N stream sources each list
+    * their prefix, so a production launch should pass the declared
+    * schema. `triggerInterval` is each stream's micro-batch trigger
+    * ([[StreamingPipeline.sinkStream]]'s). */
   def startStreams(spark: SparkSession, a: Args, configs: Seq[SourceConfig],
       opts: graft.compile.ConfigCompiler.Options,
       poster: Option[() => EventPoster] = None,
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
+      schema: Option[StructType] = None,
       triggerInterval: String = "10 seconds")
       : Seq[org.apache.spark.sql.streaming.StreamingQuery] = {
     val dir = a.inputSubscription.getOrElse(
       sys.error("--input_subscription is required in streaming mode"))
-    val inputSchema = schema.getOrElse(spark.read.parquet(dir).schema)
+    val inputSchema = schema.getOrElse(watchSchema(spark, dir))
     val post = poster.getOrElse(posterFactory(a))
     configs.filter(_.isParquet).map { cfg =>
       val compiled = StreamingPipeline.transformStreamRouted(
@@ -234,5 +240,21 @@ object Launcher {
           s"${dir}_graft_ckpt_${cfg.configId}")
         .start()
     }
+  }
+
+  /** The schema `spark.read.parquet(dir)` infers when the files under
+    * the watch `dir` share one, with no Spark job and no partition
+    * columns: the footer of the first data file in path order, at any
+    * depth, skipping `_`/`.` names as the file index does
+    * ([[Tables.readParquet]]). Fails when `dir` holds no data file. */
+  private[graft] def watchSchema(spark: SparkSession, dir: String): StructType = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def files(p: Path): Seq[String] = fs.listStatus(p).toSeq
+      .filterNot(st => "_.".contains(st.getPath.getName.head))
+      .flatMap(st => if (st.isDirectory) files(st.getPath) else Seq(st.getPath.toString))
+    val first = files(root).minOption.getOrElse(throw new IllegalArgumentException(
+      s"--input_subscription $dir holds no data file to take the input schema from"))
+    Tables.readParquet(spark, first).schema
   }
 }

@@ -148,10 +148,10 @@ object Sessions {
     * (`spark.sql.adaptive.coalescePartitions.parallelismFirst`):
     * `true` (the Spark default) coalesces post-shuffle partitions
     * only down to the cluster's parallelism; `false` sizes them by
-    * `advisoryPartitionSizeInBytes` regardless of slot count. One
-    * constant so the r19 32-core efficiency diagnosis can A/B it
-    * (see Bench's env override) and the verdict can flip it in one
-    * place once measured. */
+    * `advisoryPartitionSizeInBytes` regardless of slot count. The
+    * r19 A/B measured `false` worse (1057 vs 543 CPU-s on the 10-gate
+    * heavy subset at local[32], OPTIMIZATION_r19.md §1), so the Spark
+    * default stays. */
   val AqeParallelismFirst = "true"
 
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =

@@ -218,75 +218,6 @@ object BatchPipeline {
       checked.collect { case (cfg, c) if c.corrupt > 0 =>
         cfg.configId -> c.corrupt })
 
-  /** Escape Hadoop glob metacharacters so a literal file-name prefix
-    * embeds safely in a glob pattern. */
-  private def globEscape(s: String): String =
-    s.flatMap(c => if ("*?[]{}\\".contains(c)) s"\\$c" else c.toString)
-
-  /** What a file source reads to see every object under the flat
-    * (GCS-style) `prefix`, split at its last '/' into a directory part
-    * and a file-name part. Prefix `d/a_` matches object `d/a_x.parquet`
-    * AND `d/a_2024/part.parquet`: the leaf glob `d/a_*` (glob
-    * metacharacters in the file-name part escaped) matches both the flat
-    * files and any prefix-named subdirectory, whose files the file index
-    * lists, and never an unrelated sibling or subdirectory (as a
-    * recursive scan + leaf-name-only `pathGlobFilter` would). A directory
-    * prefix (`d/`) reads its directory. None when the prefix has no '/'
-    * (its directory would be the empty string). */
-  private[graft] def prefixPath(prefix: String): Option[String] = {
-    val slash = prefix.lastIndexOf('/')
-    Option.when(slash >= 0) {
-      val (dir, base) = prefix.splitAt(slash + 1)
-      if (base.isEmpty) dir else dir + globEscape(base) + "*"
-    }
-  }
-
-  /** Transform stage with NO driver-side file list at all — the shape
-    * for lakes past [[routeFilesDistributed]]'s collect (10⁷-10⁸ objects,
-    * where even the routed path list is a driver-memory hazard). Each
-    * parquet config scans its own prefix directly:
-    *
-    *  - scan root = the config prefix's [[prefixPath]] (GCS FLAT
-    *    prefix semantics), listed recursively. Listing is Spark's own
-    *    distributed FileIndex — file paths live in executor-side
-    *    listing partitions, never in a driver Seq.
-    *  - first-match-wins across OVERLAPPING prefixes is enforced by the
-    *    router when-chain over `input_file_name()` — a file under two
-    *    configs' prefixes is transformed only by its first match, same
-    *    as the routed paths (`M/main.py:37-63`).
-    *  - corrupt isolation is the scan's `ignoreCorruptFiles` (S6's
-    *    backstop); per-file footer accounting is a driver-scale
-    *    feature by design — at this scale read errors surface in the
-    *    scan metrics, not as exact per-config counts.
-    *
-    * Returns the same (json, dlq, observations) shape as
-    * [[transformObserved]]. */
-  def transformPrefixScans(spark: SparkSession, configs: Seq[SourceConfig],
-      opts: ConfigCompiler.Options = ConfigCompiler.Options())
-      : (DataFrame, DataFrame, Map[String, Observation]) = {
-    val parts = configs.filter(_.isParquet).sortBy(_.configId).map { cfg =>
-      // a prefix with no '/' would make the scan root the empty string and
-      // fail deep inside the scan with an unrelatable Hadoop path error —
-      // reject it here with the config's name attached
-      val path = prefixPath(cfg.sourcePrefix).getOrElse(throw
-        new IllegalArgumentException(s"config ${cfg.configId}: source " +
-          s"prefix '${cfg.sourcePrefix}' has no '/' — prefix-scan mode " +
-          "needs a directory component"))
-      val scanned = spark.read.option("ignoreCorruptFiles", "true")
-        .option("recursiveFileLookup", "true").parquet(path)
-      val routedRows = scanned.filter(
-        Router.firstMatchExpr(
-          Router.normalizeFileUri(input_file_name()), configs)
-          === cfg.configId)
-      val compiled = ConfigCompiler.compile(cfg, routedRows, opts)
-      val obs = Observation()
-      (compiled.observed(obs).json, compiled.dlq, cfg.configId -> obs)
-    }
-    (parts.map(_._1).reduceOption(_ union _).getOrElse(emptyJson(spark)),
-      parts.map(_._2).reduceOption(_ union _).getOrElse(emptyDlq(spark)),
-      parts.map(_._3).toMap)
-  }
-
   /** Build the transform stage: per-config compiled mapping over one
     * vectorized scan each; event JSON + transform-DLQ frames unioned
     * across configs (both have config-independent schemas). Each

@@ -46,10 +46,14 @@ object StreamingPipeline {
     * 5-minute windowing naturally paces a backfill
     * (`M/main.py:461-462,506`); a file-stream source without a cap
     * instead lands an entire backfill-sized burst in ONE micro-batch —
-    * one giant state commit, one giant post. `None` = unpaced. */
+    * one giant state commit, one giant post. `None` = unpaced.
+    *
+    * The source lists `path` recursively: a GCS prefix matches objects
+    * at any depth under it, and no directory name becomes a partition
+    * column, as in the batch scan of each routed file. */
   private def paced(spark: SparkSession, schema: StructType, path: String,
       maxFilesPerTrigger: Option[Int]): DataFrame = {
-    val r = spark.readStream.schema(schema)
+    val r = spark.readStream.schema(schema).option("recursiveFileLookup", "true")
     maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n.toLong))
     r.parquet(path)
   }
@@ -66,10 +70,11 @@ object StreamingPipeline {
     *
     * A file can route to `cfg` only if its path starts with
     * `cfg.sourcePrefix`, so the file source lists and reads only that
-    * prefix ([[routedSourcePath]]): N queries over one directory read
-    * each file once between them, not N times, and `maxFilesPerTrigger`
-    * paces the config's own files. The row filter still decides
-    * between overlapping prefixes. */
+    * prefix, at any depth ([[routedSourcePath]]): the stream delivers
+    * exactly the files the batch router would route to `cfg`, N queries
+    * over one directory read each file once between them, not N times,
+    * and `maxFilesPerTrigger` paces the config's own files. The row
+    * filter still decides between overlapping prefixes. */
   def transformStreamRouted(spark: SparkSession, cfg: SourceConfig,
       allConfigs: Seq[SourceConfig], dir: String, schema: StructType,
       opts: ConfigCompiler.Options = ConfigCompiler.Options(),
@@ -83,30 +88,31 @@ object StreamingPipeline {
   }
 
   /** The path a routed stream over the watch `dir` reads for a config
-    * with `prefix`: the prefix's [[BatchPipeline.prefixPath]] leaf glob
-    * (`dir/a_` -> `dir/a_*`). The whole `dir` instead when
-    *  - the prefix does not lie under `dir` as a string (a `file://`
-    *    dir with plain-path prefixes, another directory): its glob
-    *    could read outside `dir`;
-    *  - the prefix has no file-name part: a directory source must exist
-    *    when the query starts, a glob need not;
-    *  - `dir` holds a `_spark_metadata` sink log (or the check fails):
-    *    Spark reads such a directory through the log, which hides files
-    *    of uncommitted batches, and a glob path would bypass it.
-    * The whole `dir` is listed without recursion, so in these fallbacks
-    * a file in a subdirectory of `dir` is never delivered, even one
-    * under the prefix; only the leaf glob reaches a prefix-named
-    * subdirectory's files. */
+    * with `prefix`: the glob `root*`, with every glob metacharacter of
+    * `root` escaped, where `root` is the prefix when it lies under `dir`
+    * as a string and `dir/` when it does not (a `file://` dir with
+    * plain-path prefixes, a prefix elsewhere). Listed recursively
+    * ([[paced]]), it reaches every file whose path starts with `root`,
+    * at any depth: `dir/a_` reads `dir/a_1.parquet` and
+    * `dir/a_2024/x/p.parquet`, `dir/sub/` reads only `sub/`. The whole
+    * `dir` instead when it holds a `_spark_metadata` sink log (or the
+    * check fails): Spark reads such a directory through the log, which
+    * hides files of uncommitted batches, and a glob would bypass it. */
   private[graft] def routedSourcePath(spark: SparkSession, dir: String,
       prefix: String): String = {
-    def sinkLog = scala.util.Try {
+    val sinkLog = scala.util.Try {
       val log = new org.apache.hadoop.fs.Path(dir, "_spark_metadata")
       log.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(log)
     }.getOrElse(true)
-    if (prefix.startsWith(dir.stripSuffix("/") + "/") && !prefix.endsWith("/") &&
-        !sinkLog) BatchPipeline.prefixPath(prefix).getOrElse(dir)
-    else dir
+    val base = dir.stripSuffix("/") + "/"
+    if (sinkLog) dir
+    else globEscape(if (prefix.startsWith(base)) prefix else base) + "*"
   }
+
+  /** Escape Hadoop glob metacharacters so a literal path embeds safely
+    * in a glob pattern. */
+  private def globEscape(s: String): String =
+    s.flatMap(c => if ("*?[]{}\\".contains(c)) s"\\$c" else c.toString)
 
   /** Wire a compiled stream (`event`, `properties`, `error`,
     * `_counters`, as [[transformStreamRouted]] returns it) to the

@@ -217,13 +217,15 @@ object Probe {
     "embed_dbscan" -> "embeddings", "stream_incremental_dedup" -> "documents",
     "ann_graph_append" -> "embeddings", "doc_dedup_best" -> "documents")
 
-  /** Wall, task and CPU seconds of each query at each SF, then CPU
-    * growth exponents per SF pair. Exponents are taken against the
-    * gate's ACTUAL input growth, not the nominal SF: documents and
-    * embeddings are the same size at sf0.001 and sf0.01 and grow at
-    * sf0.1, while the TPC-H tables grow at every step. No SF is
-    * synthesized by replication: duplicated documents all land in one
-    * LSH band and distort the very candidate growth this measures. */
+  /** Wall, task and CPU seconds of each query at each SF, and its
+    * largest single-task CPU seconds (a single-task window shows as
+    * `max_task_cpu_s` near cpu), then CPU growth exponents per SF
+    * pair. Exponents are taken against the gate's ACTUAL input
+    * growth, not the nominal SF: documents and embeddings are the same
+    * size at sf0.001 and sf0.01 and grow at sf0.1, while the TPC-H
+    * tables grow at every step. No SF is synthesized by replication:
+    * duplicated documents all land in one LSH band and distort the
+    * very candidate growth this measures. */
   def scale(spark: SparkSession, sfs: Seq[String], queries: Seq[String]): Unit = {
     val listener = new BenchListener
     spark.sparkContext.addSparkListener(listener)
@@ -241,14 +243,15 @@ object Probe {
       val taskS = listener.taskTimeMs.sum / 1e3
       cpu((name, sf)) = listener.taskCpuNs.sum / 1e9
       println(f"[scale] $name%-28s $sf%-24s wall $wall%8.2f s " +
-        f"task $taskS%8.2f s cpu ${cpu((name, sf))}%8.2f s" +
+        f"task $taskS%8.2f s cpu ${cpu((name, sf))}%8.2f s " +
+        f"max_task_cpu_s ${listener.maxTaskCpuNs.get / 1e9}%6.2f" +
         (if (built.nonEmpty) built.mkString(" built:[", ",", "]") else "") +
         err.map(e => s" ERR: $e").getOrElse(""))
     }
     spark.sparkContext.removeSparkListener(listener)
     val tables = Seq("documents", "embeddings")
     val rows = (for (sf <- sfs; t <- tables)
-      yield (sf, t) -> spark.read.parquet(s"$sf/$t.parquet").count().toDouble).toMap
+      yield (sf, t) -> Tables.readParquet(spark, s"$sf/$t.parquet").count().toDouble).toMap
     println("[scale] --- CPU scaling exponents vs INPUT-ROW growth " +
       "(1.0 = linear, 2.0 = quadratic; '=' = same input) ---")
     val gateTable = ScaleGates.toMap

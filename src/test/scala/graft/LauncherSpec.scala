@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.config.ConfigLoader
+import graft.config.{CastType, ConfigLoader, FieldMapping, SourceConfig}
 
 /** S7 launch surface: URI validation, existence check, abort-on-load
   * semantics (`M/gcs_utils.py:18-45`, `M/main.py:26-34,430-437`) —
@@ -18,6 +18,21 @@ class LauncherSpec extends SparkSpec {
       |  "field_mappings": [
       |    {"source_field": "a", "mixpanel_field": "b", "type": "string"}]}]
       |""".stripMargin
+
+  /** Write `rows` as ONE flat parquet file at `target`, creating its
+    * directory. */
+  private def writeFlat(target: java.nio.file.Path,
+      rows: Seq[(String, Long, String)]): Unit = {
+    Files.createDirectories(target.getParent)
+    writeFlat(rows.toDF("event_type", "ts_epoch", "uid"), target)
+  }
+
+  private def streamCfg(id: String, prefix: String) = SourceConfig(
+    configId = id, sourcePrefix = prefix,
+    eventNameField = Some("event_type"),
+    fieldMappings = Seq(
+      FieldMapping("ts_epoch", "time", CastType.UnixTimestampAuto),
+      FieldMapping("uid", "$user_id", CastType.StringT)))
 
   test("validateUri: scheme and bucket/object shape enforced") {
     assert(ConfigLoader.validateUri("gs://bucket/path/x.json") ==
@@ -84,20 +99,8 @@ class LauncherSpec extends SparkSpec {
 
   test("streaming launcher end-to-end: N configs over a mixed dir, " +
       "per-config checkpoints, DLQ dirs, exactly-once mapping") {
-    import scala.jdk.CollectionConverters._
     val watch = Files.createTempDirectory("graft_launch_stream")
     val dlqDir = Files.createTempDirectory("graft_launch_dlq")
-    def writeFlat(target: java.nio.file.Path,
-        rows: Seq[(String, Long, String)]): Unit = {
-      val tmp = Files.createTempDirectory("graft_launch_flat")
-      rows.toDF("event_type", "ts_epoch", "uid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/out")
-      val part = Files.list(java.nio.file.Paths.get(s"$tmp/out"))
-        .iterator().asScala
-        .find(p => p.getFileName.toString.startsWith("part-") &&
-          p.toString.endsWith(".parquet")).get
-      Files.copy(part, target)
-    }
     // mixed dir: two configs' files plus an orphan no config matches;
     // one b-row with an empty dynamic event name (-> transform DLQ)
     writeFlat(watch.resolve("a_1.parquet"),
@@ -161,19 +164,7 @@ class LauncherSpec extends SparkSpec {
 
   test("streaming rate control: --max_files_per_trigger paces a file " +
       "burst across micro-batches with mapping intact") {
-    import scala.jdk.CollectionConverters._
     val watch = Files.createTempDirectory("graft_launch_paced")
-    def writeFlat(target: java.nio.file.Path,
-        rows: Seq[(String, Long, String)]): Unit = {
-      val tmp = Files.createTempDirectory("graft_paced_flat")
-      rows.toDF("event_type", "ts_epoch", "uid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/out")
-      val part = Files.list(java.nio.file.Paths.get(s"$tmp/out"))
-        .iterator().asScala
-        .find(p => p.getFileName.toString.startsWith("part-") &&
-          p.toString.endsWith(".parquet")).get
-      Files.copy(part, target)
-    }
     // a 4-file burst, all present BEFORE the stream starts — the
     // backfill case that lands in ONE micro-batch without the cap
     (1 to 4).foreach(i => writeFlat(watch.resolve(s"a_$i.parquet"),
@@ -215,6 +206,42 @@ class LauncherSpec extends SparkSpec {
     // ...across one micro-batch PER FILE, not one giant batch
     val batches = qs.head.recentProgress.count(_.numInputRows > 0)
     assert(batches == 4, s"expected 4 paced micro-batches, got $batches")
+  }
+
+  test("startStreams takes the watch dir's schema from one footer: no " +
+      "Spark job, the schema inference gives") {
+    val watch = Files.createTempDirectory("graft_launch_schema")
+    writeFlat(Seq(("b", 20L, "u2", 1.5)).toDF("event_type", "ts_epoch",
+      "uid", "extra"), watch.resolve("b_1.parquet"))
+    // inference reads the first file in path order only: a_1's schema
+    writeFlat(watch.resolve("a_1.parquet"), Seq(("a", 10L, "u1")))
+    Files.createFile(watch.resolve("_SUCCESS"))
+    val (schema, jobs, _) = withJobsAndTasks(
+      Launcher.watchSchema(spark, watch.toString))
+    assert(jobs == 0)
+    assert(schema.fieldNames.toSeq == Seq("event_type", "ts_epoch", "uid"))
+    assert(schema == spark.read.parquet(watch.toString).schema)
+    val empty = Files.createTempDirectory("graft_launch_schema_empty")
+    val e = intercept[IllegalArgumentException](
+      Launcher.watchSchema(spark, empty.toString))
+    assert(e.getMessage.contains("no data file"))
+  }
+
+  test("streaming launcher starts on a watch dir with dt=2024/ and sub/ " +
+      "subdirectories and delivers every file once") {
+    val watch = Files.createTempDirectory("graft_launch_layout")
+    writeFlat(watch.resolve("a_1.parquet"), Seq(("flat", 10L, "u1")))
+    writeFlat(watch.resolve("dt=2024/p.parquet"), Seq(("dt", 20L, "u2")))
+    writeFlat(watch.resolve("sub/q.parquet"), Seq(("sub", 30L, "u3")))
+    val args = Launcher.Args(mode = "streaming",
+      inputSubscription = Some(watch.toString))
+    PostedEvents.n.set(0)
+    val qs = Launcher.startStreams(spark, args,
+      Seq(streamCfg("w", s"$watch/")), graft.compile.ConfigCompiler.Options(),
+      poster = Some(() => new EventCountingPoster),
+      triggerInterval = "100 milliseconds")
+    try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
+    assert(PostedEvents.n.get == 3L)
   }
 
   test("parseArgs: required args and unknown flags rejected") {

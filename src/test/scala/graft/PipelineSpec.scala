@@ -301,25 +301,131 @@ class PipelineSpec extends SparkSpec {
       Map("a" -> 2, "b" -> 2))
   }
 
+  /** [[writeFlatParquet]] one row `(event, ts, "u")` at `dir/rel`,
+    * creating the directories `rel` names. */
+  private def writeRow(dir: java.nio.file.Path, rel: String, event: String,
+      ts: Long = 10L): Unit = {
+    Files.createDirectories(dir.resolve(rel).getParent)
+    writeFlatParquet(dir.resolve(rel), Seq((event, ts, "u")))
+  }
+
+  test("routed streams: overlapping prefixes route first-match-wins; a " +
+      "subdirectory file reaches the directory prefix") {
+    val dir = Files.createTempDirectory("graft_routed_overlap")
+    writeRow(dir, "a_1.parquet", "from_a")
+    writeRow(dir, "b_1.parquet", "from_b")
+    writeRow(dir, "sub/c.parquet", "from_sub")
+    // b's prefix holds a's whole subtree; a_1 still goes to a only
+    val cfgs = Seq(routedCfg("a", s"$dir/a_"), routedCfg("b", s"$dir/"))
+    PostedEvents.n.set(0)
+    val read = rowsRead(runRouted(dir.toString, cfgs,
+      Files.createTempDirectory("graft_routed_overlap_ckpt")))
+    assert(read == Map("a" -> 1L, "b" -> 3L))
+    assert(PostedEvents.n.get == 3L) // once each: b posts b_1 + sub/c
+  }
+
+  test("routed stream: URI-special characters in paths still prefix-match " +
+      "(input_file_name percent-encodes)") {
+    val dir = Files.createTempDirectory("graft routed enc") // space in path
+    writeRow(dir, "a+b 1.parquet", "enc")
+    PostedEvents.n.set(0)
+    val read = rowsRead(runRouted(dir.toString,
+      Seq(routedCfg("e", s"$dir/a+b")),
+      Files.createTempDirectory("graft_routed_enc_ckpt")))
+    assert(read == Map("e" -> 1L) && PostedEvents.n.get == 1L)
+  }
+
+  test("routed stream: flat files, a dt=2024/ and a plain subdirectory " +
+      "are each delivered once") {
+    val watch = Files.createTempDirectory("graft_routed_layout")
+    writeRow(watch, "a_1.parquet", "flat")
+    writeRow(watch, "dt=2024/p.parquet", "partition_named")
+    writeRow(watch, "sub/q.parquet", "plain_sub")
+    Files.createFile(watch.resolve("_SUCCESS")) // not parquet: skipped
+    PostedEvents.n.set(0)
+    val read = rowsRead(runRouted(watch.toString,
+      Seq(routedCfg("w", s"$watch/")),
+      Files.createTempDirectory("graft_routed_layout_ckpt")))
+    assert(read == Map("w" -> 3L) && PostedEvents.n.get == 3L)
+  }
+
+  test("routed stream: a prefix-named subdirectory's files are delivered " +
+      "two levels deep") {
+    val watch = Files.createTempDirectory("graft_routed_deep")
+    writeRow(watch, "a_1.parquet", "flat")
+    writeRow(watch, "a_2024/x/p.parquet", "deep")
+    PostedEvents.n.set(0)
+    val read = rowsRead(runRouted(watch.toString,
+      Seq(routedCfg("a", s"$watch/a_")),
+      Files.createTempDirectory("graft_routed_deep_ckpt")))
+    assert(read == Map("a" -> 2L) && PostedEvents.n.get == 2L)
+  }
+
+  test("routed stream: a directory prefix reads only its directory") {
+    val watch = Files.createTempDirectory("graft_routed_dirprefix")
+    writeRow(watch, "a_1.parquet", "flat")
+    writeRow(watch, "a_2.parquet", "flat2")
+    writeRow(watch, "sub/s.parquet", "in_sub")
+    PostedEvents.n.set(0)
+    val read = rowsRead(runRouted(watch.toString,
+      Seq(routedCfg("s", s"$watch/sub/")),
+      Files.createTempDirectory("graft_routed_dirprefix_ckpt")))
+    assert(read == Map("s" -> 1L) && PostedEvents.n.get == 1L)
+  }
+
+  test("routed stream: glob metacharacters in the watch dir match " +
+      "literally, not a sibling directory") {
+    val base = Files.createTempDirectory("graft_routed_metadir")
+    writeRow(base, "in[1] x/watch/a_1.parquet", "lit")
+    // what the unescaped directory in[1] x would match instead
+    writeRow(base, "in1 x/watch/a_1.parquet", "sib")
+    writeRow(base, "in1 x/watch/a_2.parquet", "sib2")
+    val watch = s"$base/in[1] x/watch"
+    PostedEvents.n.set(0)
+    val read = rowsRead(runRouted(watch, Seq(routedCfg("a", s"$watch/a_")),
+      Files.createTempDirectory("graft_routed_metadir_ckpt")))
+    assert(read == Map("a" -> 1L) && PostedEvents.n.get == 1L)
+  }
+
+  test("routed stream: a file-sink output dir as the watch dir still skips " +
+      "a stray uncommitted file") {
+    val src = Files.createTempDirectory("graft_routed_sinksrc")
+    writeRow(src, "a.parquet", "committed")
+    writeRow(src, "b.parquet", "committed2")
+    val watch = Files.createTempDirectory("graft_routed_sinkout")
+    val sink = spark.readStream.schema(eventSchema).parquet(src.toString)
+      .writeStream.format("parquet")
+      .option("checkpointLocation",
+        Files.createTempDirectory("graft_routed_sink_ckpt").toString)
+      .start(watch.toString)
+    try sink.processAllAvailable() finally sink.stop()
+    assert(Files.isDirectory(watch.resolve("_spark_metadata")))
+    writeRow(watch, "part-stray.parquet", "uncommitted")
+    PostedEvents.n.set(0)
+    val read = rowsRead(runRouted(watch.toString,
+      Seq(routedCfg("w", s"$watch/")),
+      Files.createTempDirectory("graft_routed_sinkout_ckpt")))
+    assert(read == Map("w" -> 2L) && PostedEvents.n.get == 2L)
+  }
+
   test("routed source path: the prefix's leaf glob, the whole dir in " +
       "each fallback") {
     val watch = Files.createTempDirectory("graft_routed_path").toString
     def path(dir: String, prefix: String) =
       StreamingPipeline.routedSourcePath(spark, dir, prefix)
-    assert(BatchPipeline.prefixPath("d/a[1]_") == Some("d/a\\[1\\]_*"))
-    assert(BatchPipeline.prefixPath("d/sub/") == Some("d/sub/"))
-    assert(BatchPipeline.prefixPath("no-slash").isEmpty)
+    // a prefix under the dir: its own glob, escaped whole
     assert(path(watch, s"$watch/a_") == s"$watch/a_*")
     assert(path(s"$watch/", s"$watch/a_") == s"$watch/a_*")
     assert(path(watch, s"$watch/sub/a{b}_") == s"$watch/sub/a\\{b\\}_*")
-    // 1. the prefix is not under the dir as a string
-    assert(path(s"file://$watch", s"$watch/a_") == s"file://$watch")
-    assert(path(watch, s"${watch}x/a_") == watch)
-    assert(path(watch, "a_") == watch)
-    // 2. a directory prefix
-    assert(path(watch, s"$watch/") == watch)
-    assert(path(watch, s"$watch/sub/") == watch)
-    // 3. a file-sink output directory, read through its log
+    assert(path(watch, s"$watch/") == s"$watch/*")
+    assert(path(watch, s"$watch/sub/") == s"$watch/sub/*")
+    assert(path(s"$watch/in[1] x", s"$watch/in[1] x/a_") ==
+      s"$watch/in\\[1\\] x/a_*")
+    // a prefix not under the dir as a string: the whole dir's glob
+    assert(path(s"file://$watch", s"$watch/a_") == s"file://$watch/*")
+    assert(path(watch, s"${watch}x/a_") == s"$watch/*")
+    assert(path(watch, "a_") == s"$watch/*")
+    // a file-sink output directory, read through its log
     Files.createDirectory(java.nio.file.Paths.get(watch, "_spark_metadata"))
     assert(path(watch, s"$watch/a_") == watch)
   }
@@ -489,89 +595,6 @@ class PipelineSpec extends SparkSpec {
       Seq(cfgFor(dir)), () => new Always200)
     assert(res2.imported == Seq(bad))
     assert(res2.eventsJson.count() == 1)
-  }
-
-  test("prefix-scan transform: no driver file list; overlapping prefixes " +
-      "routed first-match-wins; subdirs recursed") {
-    val dir = Files.createTempDirectory("graft_scan")
-    writeFlatParquet(dir.resolve("a_1.parquet"), Seq(("from_a", 10L, "u1")))
-    writeFlatParquet(dir.resolve("b_1.parquet"), Seq(("from_b", 20L, "u2")))
-    Files.createDirectory(dir.resolve("sub"))
-    writeFlatParquet(dir.resolve("sub").resolve("c.parquet"),
-      Seq(("from_sub", 30L, "u3")))
-    def cfg(id: String, prefix: String) = SourceConfig(
-      configId = id, sourcePrefix = prefix,
-      eventNameField = Some("event_type"),
-      fieldMappings = Seq(
-        FieldMapping("ts_epoch", "time", CastType.UnixTimestampAuto),
-        FieldMapping("uid", "$user_id", CastType.StringT)))
-    // cfgB's prefix contains cfgA's whole subtree; a_1 must still go to
-    // cfgA only, and sub/c.parquet reaches cfgB via recursive lookup
-    val cfgA = cfg("a", s"$dir/a_")
-    val cfgB = cfg("b", s"$dir/")
-    val (json, _, obs) = BatchPipeline.transformPrefixScans(
-      spark, Seq(cfgA, cfgB))
-    val events = json
-      .select(get_json_object(col("event_json"), "$.event").as("e"))
-      .as[String].collect().sorted.toSeq
-    assert(events == Seq("from_a", "from_b", "from_sub")) // once each
-    assert(obs("a").get("n_rows") == 1L) // a_1 only
-    assert(obs("b").get("n_rows") == 2L) // b_1 + sub/c, NOT a_1
-  }
-
-  test("prefix-scan transform: partial-name prefix matches files under a " +
-      "prefix-named subdirectory (GCS flat prefix semantics)") {
-    // GCS prefix `d/a_` matches BOTH object `d/a_1.parquet` and object
-    // `d/a_2024/part.parquet` (flat namespace). The leaf-glob scan must
-    // reach the subdirectory file; an unrelated subdirectory stays
-    // unread (regression: pathGlobFilter tested leaf names only, so
-    // d/a_2024/ was never scanned though Router.route matches it)
-    val dir = Files.createTempDirectory("graft_scan_sub")
-    writeFlatParquet(dir.resolve("a_1.parquet"), Seq(("flat", 10L, "u1")))
-    Files.createDirectory(dir.resolve("a_2024"))
-    writeFlatParquet(dir.resolve("a_2024").resolve("part.parquet"),
-      Seq(("nested", 20L, "u2")))
-    Files.createDirectory(dir.resolve("other"))
-    writeFlatParquet(dir.resolve("other").resolve("x.parquet"),
-      Seq(("unrelated", 30L, "u3")))
-    val cfg = SourceConfig(
-      configId = "a", sourcePrefix = s"$dir/a_",
-      eventNameField = Some("event_type"),
-      fieldMappings = Seq(
-        FieldMapping("ts_epoch", "time", CastType.UnixTimestampAuto),
-        FieldMapping("uid", "$user_id", CastType.StringT)))
-    val (json, _, obs) = BatchPipeline.transformPrefixScans(spark, Seq(cfg))
-    val events = json
-      .select(get_json_object(col("event_json"), "$.event").as("e"))
-      .as[String].collect().sorted.toSeq
-    assert(events == Seq("flat", "nested"))
-    assert(obs("a").get("n_rows") == 2L)
-  }
-
-  test("prefix-scan transform: URI-special characters in paths still " +
-      "prefix-match (input_file_name percent-encodes)") {
-    val dir = Files.createTempDirectory("graft scan enc") // space in path
-    writeFlatParquet(dir.resolve("a+b 1.parquet"), Seq(("enc", 10L, "u1")))
-    val cfg = SourceConfig(
-      configId = "e", sourcePrefix = s"$dir/a+b",
-      eventNameField = Some("event_type"),
-      fieldMappings = Seq(
-        FieldMapping("ts_epoch", "time", CastType.UnixTimestampAuto),
-        FieldMapping("uid", "$user_id", CastType.StringT)))
-    // input_file_name() reports .../graft%20scan%20enc.../a+b%201.parquet;
-    // without percent-decoding the plain-path prefix never matches and
-    // the file is silently dropped
-    val (json, _, obs) = BatchPipeline.transformPrefixScans(spark, Seq(cfg))
-    assert(json.count() == 1L)
-    assert(obs("e").get("n_rows") == 1L)
-  }
-
-  test("prefix-scan transform rejects a prefix with no directory part") {
-    val bad = SourceConfig("x", "no-slash-anywhere")
-    val e = intercept[IllegalArgumentException] {
-      BatchPipeline.transformPrefixScans(spark, Seq(bad))
-    }
-    assert(e.getMessage.contains("no '/'"))
   }
 
   test("distributed routing: 50k URIs, two passes, exact counts") {
